@@ -354,9 +354,7 @@ class GraphFrame:
         ).localCheckpoint()
         from pyspark.sql.window import Window
 
-        from phageclouds_graphdatabase_spark.operators.graph import _iter_lazy
-
-        lazy = _iter_lazy(maxIter)
+        lazy = maxIter <= G.ITER_LAZY
         for _ in range(maxIter):
             nb = und.join(
                 labels.withColumnRenamed("id", "__nid"),
@@ -378,5 +376,5 @@ class GraphFrame:
                 winners.withColumnRenamed("label", "__wl"), "id", "left_outer"
             ).select("id", F.coalesce("__wl", "label").alias("label"))
             if not lazy:
-                labels = labels.localCheckpoint()
+                labels = G._ckpt(labels)
         return labels

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from phageclouds_graphdatabase_spark.operators.graph import _ckpt
+
 
 def jaccard_pairs_capped(
     shingles: DataFrame,
@@ -56,11 +58,11 @@ def jaccard_pairs_capped(
     # ``reliable_checkpoint`` (ADVICE r9 low): localCheckpoint truncates
     # lineage, so on clusters with executor churn (spot nodes, dynamic
     # allocation) losing a host fails the query instead of recomputing —
-    # cluster callers opt into the session checkpoint dir here exactly
-    # like the graph operators' _ckpt(reliable) pattern.
+    # cluster callers opt into the SparkContext checkpoint dir here through
+    # the graph operators' _ckpt, which raises a ValueError when none is set.
     sh = shingles.select("doc_id", "shingle").distinct()
     if freq_cap is not None:
-        sh = sh.checkpoint(eager=True) if reliable_checkpoint else sh.localCheckpoint()
+        sh = _ckpt(sh, reliable_checkpoint)
     else:
         sh = sh.cache()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))

@@ -135,154 +135,68 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def _ckpt(df: DataFrame, reliable: bool) -> DataFrame:
-    """Truncate lineage between rounds. ``localCheckpoint`` stores blocks on
-    executors (fast, lost on executor failure); ``checkpoint`` writes to the
-    session's checkpoint dir (HDFS/S3 on a cluster) and survives executor
-    loss -- the difference that matters on a 1000-executor run where some
-    loss per hour is expected."""
-    return df.checkpoint(eager=True) if reliable else df.localCheckpoint()
+# Tuning constants of the iterative operators. Each picks between two
+# value-identical code paths; tests patch them to cover both.
+#
+# Hop bound at or under which the BFS primitives UNROLL LAZILY: all rounds
+# compose into one query instead of a per-round checkpoint + emptiness
+# probe. At small k the whole BFS is a handful of MB-scale shuffles, so
+# the eager loop's ~2 sequential jobs per round dominate (sampled
+# betweenness 4.8-5.2 s eager vs 3.9-4.5 s lazy at sf0.1). The lazy plan
+# grows ~2^k (the visited frame is consumed twice per round), so deep BFS
+# (exact closeness/harmonic, k=30) keeps the checkpointed loop.
+BFS_LAZY_K = 4
+# Iteration bound at or under which a fixed-iteration LINEAR loop
+# (pagerank/ppr/katz/eigenvector/HITS, label propagation) composes its
+# rounds into one lazy query: at the default 2 iterations each round's
+# shuffle is a few MB and the per-round job dominates.
+ITER_LAZY = 4
+# The same bound for fastRP's propagation layers.
+FASTRP_LAZY_ITERS = 4
+# h-index iterations composed into each checkpointed query of a
+# fixed-rounds core decomposition (best of {1, 2, 4} at sf0.1).
+COREDEC_ROUND_BATCH = 4
+# Row cap under which an iterative operator broadcasts its per-round
+# node-state frame (|V| rows of (id, value), ~150 MB as a hash relation at
+# 4M rows) instead of shuffle-joining it against the static edge frame.
+LOOP_BCAST_ROWS = 4_000_000
+# |E| cap under which node similarity broadcasts its packed member table.
+NODESIM_MEMB_BCAST_ROWS = 4_000_000
 
 
-def _ckpt_part(
-    df: DataFrame,
-    key: str | list,
-    reliable: bool,
-    sort: bool = True,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Checkpoint ``df`` hash-partitioned (and sorted) by ``key``, with the
-    partitioning RECORDED in the checkpointed plan — the bucketed-table /
-    shared-exchange pattern (optimization guide §2.4) applied to iterative
-    loop state: every downstream join or aggregate keyed the same way then
-    skips its Exchange (and a sort-merge join its Sort) in EVERY round,
-    instead of re-shuffling the static frame per round.
+def _ckpt(df: DataFrame, reliable: bool = False) -> DataFrame:
+    """Cut the lineage of iterative loop state, in two steps.
 
-    ``Dataset.checkpoint`` records the executed plan's outputPartitioning/
-    outputOrdering into the LogicalRDD, but an AQE-executed plan reports
-    ``UnknownPartitioning`` (measured on 4.1.2: repartition+sort+
-    localCheckpoint under AQE carries no partitioning; the same plan with
-    AQE off records ``hashpartitioning(key, N)`` + the sort order, and a
-    subsequent join keyed on it plans with zero Exchange/Sort on this
-    side). So AQE is disabled for the one materializing query and restored
-    after. The partition count is the session's
-    ``spark.sql.shuffle.partitions`` — the same scale-parameterized number
-    every other exchange uses — so the layout is cluster-valid, not a
-    local[32] constant. Trade-off, stated honestly: the materializing
-    query itself runs without AQE (no runtime coalesce/skew-split for
-    that one pass); callers use this for frames keyed by hash-uniform
-    ids where static partitioning is safe.
-
-    ``num_partitions``: callers that already materialized the frame once
-    under AQE pass its coalesced partition count here, which makes the
-    pinned layout SCALE-ADAPTIVE (AQE sized the partitions from the
-    frame's actual bytes) instead of a constant — the guide §2's
-    "derive from input size" rule for iterative loop state."""
-    keys = [key] if isinstance(key, str) else list(key)
+    1. Materialize: ``localCheckpoint`` stores blocks on executors (fast,
+       lost on executor failure); ``reliable`` writes an eager
+       ``checkpoint`` to the SparkContext checkpoint dir (HDFS/S3 on a
+       cluster), which survives executor loss.
+    2. Rebuild the frame over the materialized row RDD. A checkpointed
+       LogicalRDD keeps its origin plan's size estimate
+       (``LogicalRDD.rewriteStatsAndConstraints``), and a round that
+       joins its state k times multiplies that estimate by ~k: the
+       sizeInBytes BigInt gains digits every round until Catalyst's stats
+       visits dominate the loop (components on a shuffled 3,000-node path:
+       20 -> 125,913 digits over 17 cuts). The rebuilt relation carries
+       the session's default size estimate, a constant, so a loop's cost
+       tracks its live data; AQE still plans from runtime sizes."""
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    out = df.repartition(n, *[F.col(k) for k in keys])
-    if sort:
-        out = out.sortWithinPartitions(*keys)
-    return _ckpt_noaqe(out, reliable)
-
-
-import threading
-
-# One lock serializes EVERY scoped session-conf window in the engine
-# (_ckpt_noaqe, _fine_coalesce, streaming run_available_now): SQL confs
-# are session-global, and the engine itself runs concurrent driver
-# threads (_two_legs), so a query planned inside another thread's window
-# would silently inherit the temporary values (AQE off, 8 shuffle
-# partitions, fine coalescing) — VERDICT r9 "What's wrong" #2. RLock so
-# a window may nest inside itself on one thread (e.g. _ckpt_fine around
-# a loop that checkpoints via _ckpt_part).
-_CONF_WINDOW_LOCK = threading.RLock()
-
-
-def _ckpt_noaqe(df: DataFrame, reliable: bool) -> DataFrame:
-    spark = df.sparkSession
-    with _CONF_WINDOW_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return _ckpt(df, reliable)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def _bfs_lazy_k() -> int:
-    """Hop bound at or under which the BFS primitives UNROLL LAZILY — all
-    rounds composed into one query instead of a per-round
-    localCheckpoint + emptiness probe (round 9, guide §1.2 step 1 /
-    §2.4). The eager loop costs ~2 sequential jobs per round plus a py4j
-    round-trip and an AQE re-plan each; at small k the whole BFS is a
-    handful of MB-scale shuffles, so that per-round latency dominates
-    (measured: sampled betweenness 4.8–5.2 s eager vs 3.9–4.5 s lazy at
-    sf0.1, value-identical). The plan of the lazy form grows O(k²)
-    (level i's anti-join re-references levels 0..i-1), so deep BFS
-    (exact closeness/harmonic, k=30) keeps the checkpointed loop with
-    its early exit. Env-parameterized; the default 4 covers the sampled
-    centralities (k=3) without risking plan blowup. The value is CLAMPED
-    at 6 (ADVICE r9: the visited frame is consumed twice per round —
-    anti-join + union — so the composed plan grows ~2^k; an operator
-    exporting 12 would hit exponential analysis time and silently lose
-    the frontier-emptiness early exit)."""
-    import os
-
-    return min(6, int(os.environ.get("SPARK_GRAFT_BFS_LAZY_K", "4")))
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _fine_coalesce(spark, advisory: str | None = None, floor: str | None = None):
-    """Temporarily FINE AQE coalescing target (round 9): the
-    lazily-unrolled sigma-BFS pipeline is CPU-dense per byte — whole-
-    stage-codegen'd join+aggregate+anti-join chains over a ~2 MB frame —
-    so AQE's byte-based coalescing (64 MB advisory, 1 MB floor)
-    serializes a whole BFS level onto ONE core (measured: a 1-task stage
-    at 1.22 s for 1.8 MB input). Shrinking the advisory/floor for just
-    the sigma materialization keeps those stages wide (in-session A/B:
-    sampled betweenness [3.38,3.54,3.99] → [2.97,3.03,3.15]); applied
-    GLOBALLY the same values regress byte-dense queries (nodesim +0.6 s,
-    harmonic +0.2 s — measured and rejected), hence the scoped window.
-    Values are env-tunable; at cluster scale these stages carry GBs and
-    the window is a no-op. The window runs under _CONF_WINDOW_LOCK
-    (round 10 — VERDICT r9 "What's wrong" #2): a concurrent driver
-    thread planning a query mid-window would otherwise inherit the fine
-    values session-wide."""
-    import os
-
-    adv = advisory or os.environ.get("SPARK_GRAFT_BFS_ADVISORY", "1m")
-    flo = floor or os.environ.get("SPARK_GRAFT_BFS_MIN_PARTITION", "64k")
-    k_adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    k_flo = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    with _CONF_WINDOW_LOCK:
-        prev_adv = spark.conf.get(k_adv, None)
-        prev_flo = spark.conf.get(k_flo, None)
-        spark.conf.set(k_adv, adv)
-        spark.conf.set(k_flo, flo)
-        try:
-            yield
-        finally:
-            if prev_adv is None:
-                spark.conf.unset(k_adv)
-            else:
-                spark.conf.set(k_adv, prev_adv)
-            if prev_flo is None:
-                spark.conf.unset(k_flo)
-            else:
-                spark.conf.set(k_flo, prev_flo)
-
-
-def _ckpt_fine(
-    df: DataFrame, advisory: str | None = None, floor: str | None = None
-) -> DataFrame:
-    """localCheckpoint ``df`` under one :func:`_fine_coalesce` window."""
-    with _fine_coalesce(df.sparkSession, advisory, floor):
-        return df.localCheckpoint()
+    if reliable:
+        if spark.sparkContext.getCheckpointDir() is None:
+            raise ValueError(
+                "a reliable checkpoint needs a checkpoint directory: pass "
+                "checkpoint_dir or call SparkContext.setCheckpointDir first"
+            )
+        ck = df.checkpoint(eager=True)
+    else:
+        ck = df.localCheckpoint()
+    jdf = ck._jdf
+    return DataFrame(
+        spark._jsparkSession.internalCreateDataFrame(
+            jdf.queryExecution().toRdd(), jdf.schema(), False
+        ),
+        spark,
+    )
 
 
 def _two_legs(fa, fb):
@@ -303,120 +217,6 @@ def _two_legs(fa, fb):
         a = pool.submit(inheritable_thread_target(fa))
         b = pool.submit(inheritable_thread_target(fb))
         return a.result(), b.result()
-
-
-def _iter_lazy(iterations: int) -> bool:
-    """True when a fixed-iteration linear loop (pagerank/ppr/katz/
-    eigenvector/HITS) should COMPOSE its rounds into one lazy query
-    instead of localCheckpointing each (round 9 — the same finding as
-    _bfs_lazy_k and the fastRP layers: at the default 2 iterations each
-    round's shuffle is a few MB and the per-round job + py4j round-trip
-    + AQE re-plan dominates). These chains are LINEAR (each round
-    consumes only the previous round's frame, no driver probes), so the
-    composed plan is depth-O(iterations); deep runs keep the
-    checkpointed loop. Env-tunable; 0 forces eager everywhere. Clamped
-    at 16 (ADVICE r9: unlike the 2^k BFS loops the chain is linear, but
-    Catalyst analysis/optimization of a 100-round composed plan is its
-    own latency cliff — deep budgets belong on the checkpointed loop)."""
-    import os
-
-    return iterations <= min(
-        16, int(os.environ.get("SPARK_GRAFT_ITER_LAZY", "4"))
-    )
-
-
-def _loop_bcast_rows() -> int:
-    """Row cap under which an iterative operator broadcasts its per-round
-    node-state frame (|V| rows of (id, value)) instead of shuffle-joining it
-    against the static edge frame. Broadcasting the state turns every round
-    into a single exchange-free stage over the pre-partitioned edges (guide
-    §3.1: broadcast replaces a shuffle of the large side; §2.4: the static
-    side's partitioning is established once). 4M rows of (string id, long)
-    is ~150 MB as a hash relation — "a few hundred MB is usually fine"
-    territory, far under the 8 GB / 512M-row broadcast cap. Parameterized
-    (env) so a cluster with bigger executors can raise it and a 100-TB graph
-    with |V| past the cap automatically falls back to the shuffle path —
-    NOT a local[32]-only constant."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_LOOP_BCAST_ROWS", "4000000"))
-
-
-def _mem_ckpt(df: DataFrame) -> DataFrame:
-    """In-memory lineage cut that ALSO resets plan statistics (round 8) —
-    the zero-I/O sibling of :func:`_pq_ckpt` for per-round loop state.
-
-    ``localCheckpoint`` rewrites the new LogicalRDD's stats from the
-    pre-checkpoint plan (``LogicalRDD.rewriteStatsAndConstraints``), so
-    a loop whose round plan references its checkpointed state k > 1
-    times MULTIPLIES sizeInBytes digits by ~k per round — Louvain's
-    scored plan joins ``lab`` three times and ``k`` twice, and by round
-    6 Catalyst is Toom-Cook-multiplying thousand-digit BigIntegers
-    inside every stats visit (measured on a 9-EDGE graph: rounds=8,
-    levels=2 took 95 s, the per-round checkpoint doubling 0.7 → 34 s;
-    the pre-fix round-8 test hang burned 22 CPU-minutes in ONE
-    BigInteger.multiply). Rebuilding the frame over the SAME
-    materialized InternalRow RDD (``internalCreateDataFrame``) drops
-    the origin stats — sizeInBytes falls back to the conf default,
-    bounded digits per round; AQE re-plans from RUNTIME sizes, so the
-    physical strategy is unaffected. Falls back to the parquet
-    round-trip if the internal API ever moves."""
-    ck = df.localCheckpoint()
-    try:
-        return _internal_df_rebuild(ck)
-    except Exception:  # private API moved: pay the parquet round-trip
-        return _pq_ckpt(df, False)
-
-
-def _internal_df_rebuild(ck: DataFrame) -> DataFrame:
-    """The private-API seam of :func:`_mem_ckpt`, isolated so the
-    fallback test can force it to fail (VERDICT r8 "What's wrong" #4): a
-    Spark upgrade that moves ``internalCreateDataFrame`` must surface as
-    the parquet round-trip engaging, loudly pinned, not as a silent
-    behavior change."""
-    jdf = ck._jdf
-    jdf2 = ck.sparkSession._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False
-    )
-    return DataFrame(jdf2, ck.sparkSession)
-
-
-def _pq_ckpt(df: DataFrame, reliable: bool) -> DataFrame:
-    """Lineage cut that also RESETS plan statistics.
-
-    ``Dataset.checkpoint``/``localCheckpoint`` rewrite the new LogicalRDD's
-    stats from the PRE-checkpoint plan's estimates
-    (``LogicalRDD.rewriteStatsAndConstraints``), so join-size estimates
-    COMPOUND across checkpoint generations: S_{r+1} ~ S_r^joins. In a
-    deep-round loop (SCC on a deep condensation) the sizeInBytes BigInt
-    grows to millions of digits and Toom-Cook multiplication inside
-    ``SizeInBytesOnlyStatsPlanVisitor`` becomes the actual bottleneck
-    (observed: 700+ CPU-seconds in BigInteger.multiply on the skew
-    rehearsal). A parquet round-trip gives a relation whose stats are the
-    REAL file size — honest, and constant-size to compute. Reliable mode
-    writes under the session checkpoint dir (HDFS/S3 on a cluster);
-    without one, a process-lifetime temp dir is used — correct on
-    local/single-node runs (where tests and rehearsals live); MULTI-NODE
-    clusters must pass ``checkpoint_dir`` so the round-trip lands on
-    shared storage."""
-    import uuid
-
-    spark = df.sparkSession
-    if reliable:
-        base = spark.sparkContext.getCheckpointDir()
-    else:
-        global _PQ_CKPT_TMP
-        if _PQ_CKPT_TMP is None:
-            import tempfile
-
-            _PQ_CKPT_TMP = tempfile.TemporaryDirectory(prefix="pcgdb_pqckpt_")
-        base = _PQ_CKPT_TMP.name
-    path = f"{base}/pq_{uuid.uuid4().hex[:12]}"
-    df.write.parquet(path)
-    return spark.read.parquet(path)
-
-
-_PQ_CKPT_TMP = None
 
 
 def _components_local(
@@ -489,8 +289,8 @@ def connected_components(
       implementation and differential-testing twin.
 
     Lineage is truncated each round (the iterative-Spark failure mode,
-    SURVEY.md §4): by ``localCheckpoint`` by default, or by reliable
-    ``checkpoint()`` when ``checkpoint_dir`` is set (pass an HDFS/S3 path
+    SURVEY.md §4) by :func:`_ckpt`: ``localCheckpoint`` by default, or
+    reliable ``checkpoint()`` when ``checkpoint_dir`` is set (pass an HDFS/S3 path
     on a cluster to survive executor loss mid-run).
 
     ``local_threshold``: when the RAW edge count is at or under this bound
@@ -708,7 +508,7 @@ def k_hop(
     # multi_source_bfs_levels — 2 checkpoint jobs + an emptiness probe per
     # round is pure latency at small k; exchange reuse dedups the shared
     # level subplans, an exhausted frontier just yields empty joins)
-    lazy = k <= _bfs_lazy_k()
+    lazy = k <= BFS_LAZY_K
     visited = seeds.select("id").distinct().withColumn("hops", F.lit(0))
     if not lazy:
         visited = visited.localCheckpoint()
@@ -722,12 +522,12 @@ def k_hop(
             .withColumn("hops", F.lit(i))
         )
         if not lazy:
-            nxt = nxt.localCheckpoint()
+            nxt = _ckpt(nxt)
             if nxt.isEmpty():
                 break
         visited = visited.unionByName(nxt)
         if not lazy:
-            visited = visited.localCheckpoint()
+            visited = _ckpt(visited)
         frontier = nxt.select("id")
     return visited
 
@@ -749,7 +549,7 @@ def multi_source_bfs_levels(
     Scale: state is O(|roots| x reach), which is why production closeness
     SAMPLES roots — pass a bounded sample, never the full vertex set. Each
     round shuffles only frontier-adjacent edges keyed by (root, id); rounds
-    localCheckpoint to keep lineage flat (same discipline as k_hop)."""
+    checkpoint (_ckpt) to keep lineage flat (same discipline as k_hop)."""
     e = edges if threshold is None else edges.filter(F.col("distance") <= F.lit(threshold))
     e = e.select("src", "dst")
     if not directed:
@@ -757,7 +557,7 @@ def multi_source_bfs_levels(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     e = e.localCheckpoint()  # re-joined every BFS round
-    lazy = k <= _bfs_lazy_k()
+    lazy = k <= BFS_LAZY_K
     level0 = (
         roots.select(F.col("id").alias("root"))
         .distinct()
@@ -769,7 +569,7 @@ def multi_source_bfs_levels(
     # anti-join is the lazy union of already-checkpointed levels (no
     # re-materialization of old rows per round). Round 9: at small k the
     # rounds compose into ONE query instead (no per-round checkpoint /
-    # isEmpty probe — see _bfs_lazy_k); exchange reuse dedups the shared
+    # isEmpty probe — see BFS_LAZY_K); exchange reuse dedups the shared
     # level subplans, and the early exit is dropped (an exhausted frontier
     # just yields empty joins for the remaining unrolled rounds).
     levels = [level0]
@@ -786,7 +586,7 @@ def multi_source_bfs_levels(
             .withColumn("d", F.lit(i))
         )
         if not lazy:
-            nxt = nxt.localCheckpoint()
+            nxt = _ckpt(nxt)
             if nxt.isEmpty():
                 break
         levels.append(nxt)
@@ -1002,9 +802,9 @@ def bfs_sigma(
         )
     e = e.localCheckpoint()
     # Round 9: same lazy small-k unroll as multi_source_bfs_levels (see
-    # _bfs_lazy_k) — one composed query instead of 2 jobs + an AQE re-plan
+    # BFS_LAZY_K) — one composed query instead of 2 jobs + an AQE re-plan
     # per round; measured 4.8–5.2 → 3.9–4.5 s on sampled betweenness.
-    lazy = k <= _bfs_lazy_k()
+    lazy = k <= BFS_LAZY_K
     level0 = (
         roots.select(F.col("id").alias("root"))
         .distinct()
@@ -1032,7 +832,7 @@ def bfs_sigma(
             .select("root", "id", F.lit(i).alias("d"), "sigma")
         )
         if not lazy:
-            nxt = nxt.localCheckpoint()
+            nxt = _ckpt(nxt)
             if nxt.isEmpty():
                 break
         levels.append(nxt)
@@ -1163,9 +963,6 @@ def stress_centrality_sampled(
         # build them concurrently so one leg's tail back-fills the other's
         # idle slots (guide §2.6 via _two_legs)
         rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        # (the _fine_coalesce window measured ~0.3 s SLOWER here — two
-        # concurrent leg pipelines already fill the cores; finer
-        # partitions only add task overhead. Undirected keeps it.)
         sig, sig_t = _two_legs(
             lambda: bfs_sigma(
                 roots, e, max_depth, directed=True
@@ -1180,7 +977,7 @@ def stress_centrality_sampled(
             F.col("d").alias("dst_d"),
         )
     else:
-        sig = _ckpt_fine(bfs_sigma(roots, e, max_depth, directed=False))
+        sig = bfs_sigma(roots, e, max_depth, directed=False).localCheckpoint()
         sig_t = sig
         pairs = (
             sig.join(rset, sig["id"] == rset["t"], "left_semi")
@@ -1246,9 +1043,6 @@ def betweenness_centrality_scaled(
         # independent forward/reversed legs built concurrently (guide §2.6
         # via _two_legs) — identical rationale to stress_centrality_sampled
         rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        # (the _fine_coalesce window measured ~0.3 s SLOWER here — two
-        # concurrent leg pipelines already fill the cores; finer
-        # partitions only add task overhead. Undirected keeps it.)
         sig, sig_t = _two_legs(
             lambda: bfs_sigma(
                 roots, e, max_depth, directed=True
@@ -1264,7 +1058,7 @@ def betweenness_centrality_scaled(
             F.col("sigma").alias("sigma_st"),
         )
     else:
-        sig = _ckpt_fine(bfs_sigma(roots, e, max_depth, directed=False))
+        sig = bfs_sigma(roots, e, max_depth, directed=False).localCheckpoint()
         sig_t = sig
         pairs = (
             sig.join(rset, sig["id"] == rset["t"], "left_semi")
@@ -1332,7 +1126,7 @@ def pagerank_scaled(
     od = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("od"))
     base = (scale * (d_den - d_num)) // d_den
     pr = nodes.withColumn("pr_scaled", F.lit(scale).cast("long"))
-    lazy = _iter_lazy(iterations)
+    lazy = iterations <= ITER_LAZY
     for _ in range(iterations):
         contrib = (
             e.join(pr.join(od, "id"), e["src"] == F.col("id"))
@@ -1351,7 +1145,7 @@ def pagerank_scaled(
             )
         )
         if not lazy:
-            pr = pr.localCheckpoint()
+            pr = _ckpt(pr)
     return pr
 
 
@@ -1391,7 +1185,7 @@ def personalized_pagerank_scaled(
     pr = seed_flag.select(
         "id", (F.col("is_seed") * F.lit(scale)).cast("long").alias("pr_scaled")
     )
-    lazy = _iter_lazy(iterations)
+    lazy = iterations <= ITER_LAZY
     for _ in range(iterations):
         contrib = (
             e.join(pr.join(od, "id"), e["src"] == F.col("id"))
@@ -1410,7 +1204,7 @@ def personalized_pagerank_scaled(
             )
         )
         if not lazy:
-            pr = pr.localCheckpoint()
+            pr = _ckpt(pr)
     return pr
 
 
@@ -1432,7 +1226,7 @@ def katz_centrality_scaled(
     SQL oracle — the property that makes an iterative analytics op
     oracle-checkable at all. Distributed shape: per iteration one
     edges⋈scores equi-join + one groupBy(dst) sum, both
-    shuffle-partitioned by key; scores localCheckpoint per round.
+    shuffle-partitioned by key; scores checkpoint (_ckpt) per round.
     Returns (id, katz_scaled); sources with no in-edges hold ``scale``."""
     e = edges.select("src", "dst")
     nodes = (
@@ -1442,7 +1236,7 @@ def katz_centrality_scaled(
         .localCheckpoint()
     )
     x = nodes.withColumn("katz_scaled", F.lit(scale).cast("long"))
-    lazy = _iter_lazy(iterations)
+    lazy = iterations <= ITER_LAZY
     for _ in range(iterations):
         contrib = (
             e.join(x, e["src"] == F.col("id"))
@@ -1461,7 +1255,7 @@ def katz_centrality_scaled(
             )
         )
         if not lazy:
-            x = x.localCheckpoint()
+            x = _ckpt(x)
     return x
 
 
@@ -1539,7 +1333,7 @@ def louvain_refine(
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .withColumn("w", F.lit(1).cast("long"))
-        .transform(_mem_ckpt)
+        .transform(_ckpt)
     )
     m = canon.agg(F.sum("w")).collect()[0][0] or 0
     spark = edges.sparkSession
@@ -1579,7 +1373,7 @@ def louvain_refine(
                 intra.unionByName(carried)
                 .groupBy("id")
                 .agg(F.sum("sw").cast("long").alias("sw"))
-                .transform(_mem_ckpt)
+                .transform(_ckpt)
             )
             we = (
                 j.filter(F.col("la") != F.col("lb"))
@@ -1590,7 +1384,7 @@ def louvain_refine(
                 )
                 .groupBy("a", "b")
                 .agg(F.sum("w").cast("long").alias("w"))
-                .transform(_mem_ckpt)
+                .transform(_ckpt)
             )
         lab = _louvain_weighted_rounds(we, sw, m, rounds, early_exit)
         mapping = (
@@ -1603,7 +1397,7 @@ def louvain_refine(
                 "label",
             )
             .select("id", F.col("l2").alias("label"))
-            .transform(_mem_ckpt)
+            .transform(_ckpt)
         )
         prev_lab = lab
         if (
@@ -1639,7 +1433,7 @@ def _louvain_weighted_rounds(
         .unionByName(
             we.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
         )
-        .transform(_mem_ckpt)
+        .transform(_ckpt)
     )
     wsum = wund.groupBy(F.col("src").alias("id")).agg(
         F.sum("w").cast("long").alias("ws")
@@ -1657,9 +1451,9 @@ def _louvain_weighted_rounds(
                 + F.lit(2) * F.coalesce(F.col("sw"), F.lit(0))
             ).cast("long").alias("d"),
         )
-        .transform(_mem_ckpt)
+        .transform(_ckpt)
     )
-    lab = k.select("id", F.col("id").alias("label")).transform(_mem_ckpt)
+    lab = k.select("id", F.col("id").alias("label")).transform(_ckpt)
     win = Window.partitionBy("id").orderBy(
         F.col("gain").desc(), F.col("c").asc()
     )
@@ -1713,7 +1507,7 @@ def _louvain_weighted_rounds(
             scored.withColumn("rn", F.row_number().over(win))
             .filter(F.col("rn") == 1)
             .select("id", F.col("c").alias("label"))
-            .transform(_mem_ckpt)
+            .transform(_ckpt)
         )
         if early_exit and rnd < rounds - 1:
             # 1-row convergence SUM (the coredec trick): 0 moves means
@@ -1944,7 +1738,7 @@ def article_rank_scaled(
                     + F.expr(f"({d_num} * coalesce(s, 0L)) div {d_den}")
                 ).cast("long").alias("ar_scaled"),
             )
-            .localCheckpoint()
+            .transform(_ckpt)
         )
     return pr
 
@@ -1986,7 +1780,7 @@ def eigenvector_scaled(
         .localCheckpoint()
     )
     x = nodes.withColumn("eig_scaled", F.lit(scale).cast("long"))
-    lazy = _iter_lazy(iterations)
+    lazy = iterations <= ITER_LAZY
     for _ in range(iterations):
         contrib = (
             e.join(x, e["src"] == F.col("id"))
@@ -2004,7 +1798,7 @@ def eigenvector_scaled(
             )
         )
         if not lazy:
-            x = x.localCheckpoint()
+            x = _ckpt(x)
     if not normalized:
         return x
     xx = F.col("eig_scaled").cast("decimal(38,0)")
@@ -2101,18 +1895,12 @@ def fastrp_embeddings(
     # Round 9: for a small fixed iteration count the per-iteration
     # localCheckpoint is pure latency (a sequential job + py4j round-trip
     # per layer while each shuffle is a few MB) — compose the layers into
-    # one lazy query instead (same rationale as _bfs_lazy_k; the layer
+    # one lazy query instead (same rationale as BFS_LAZY_K; the layer
     # chain is LINEAR, and the one doubly-consumed subplan per layer —
     # next iteration + layer mixing — dedups at its aggregate exchange via
     # reuse). Deep runs keep the checkpointed loop: an O(iters)-deep plan
     # of array aggregates is fine at 4, not at 40.
-    import os
-
-    # clamped at 16 like _iter_lazy (ADVICE r9: linear chain, but deep
-    # budgets belong on the checkpointed loop, not a giant composed plan)
-    lazy = iters <= min(
-        16, int(os.environ.get("SPARK_GRAFT_FASTRP_LAZY_ITERS", "4"))
-    )
+    lazy = iters <= FASTRP_LAZY_ITERS
     layers = []
     for _ in range(iters):
         s = (
@@ -2138,7 +1926,7 @@ def fastrp_embeddings(
             )
         )
         if not lazy:
-            v = v.localCheckpoint()
+            v = _ckpt(v)
         layers.append(v)
     out = None
     for w, lv in zip(weights, layers):
@@ -2204,7 +1992,7 @@ def fastrp_embeddings_exploded(
                 nd["dim"],
                 F.expr("coalesce(s, 0L) div coalesce(deg, 1L)").alias("val"),
             )
-            .localCheckpoint()
+            .transform(_ckpt)
         )
         layers.append(v)
     mixed = None
@@ -2327,7 +2115,7 @@ def _k_core_delta(und: DataFrame, k: int, reliable: bool) -> DataFrame:
     )
     i = 0
     while True:
-        removed = deg.filter(F.col("degree") < k).select("id").localCheckpoint()
+        removed = deg.filter(F.col("degree") < k).select("id").transform(_ckpt)
         if removed.isEmpty():
             break
         i += 1
@@ -2566,33 +2354,22 @@ def core_decomposition(
     # block in the store, and keeping it executor-local blew the 48g heap
     # mid-iteration (read-ahead OOM) — the same lesson the 100M-components
     # rung taught for wcc state.
-    #
-    # Round 9 (optimization): und is checkpointed hash-partitioned by src
-    # with the partitioning RECORDED (guide §2.4 — the bucketed-table
-    # pattern for loop state). canon is materialized FIRST with AQE on
-    # (sized by its real bytes), so _ckpt_part's AQE-off window covers
-    # only the union+repartition+sort of already-materialized blocks —
-    # never the upstream distinct/edge build (measured: extending the
-    # AQE-off window upstream cost ~0.7 s at sf0.1). Partition count =
-    # 2 × canon's AQE-coalesced count: derived from the frame's actual
-    # bytes, not a local constant. Every round's H-index aggregation
-    # groups by src, so with the per-round node-value join broadcast
-    # (gate below) the whole round plans as ONE exchange-free stage; h0
-    # below is likewise exchange-free.
-    canon = _ckpt(canon, reliable_checkpoint)
-    und = _ckpt_part(
+    und = _ckpt(
         canon.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(
             canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         ),
-        "src",
         reliable_checkpoint,
-        num_partitions=max(1, 2 * canon.rdd.getNumPartitions()),
     )
-    # h₀ stays LAZY (round 10): the degree aggregate is exchange-free
-    # over und's recorded partitioning, so each consumer (the probe job,
-    # the first round's broadcast build, the fixpoint SUM) recomputes it
-    # as one cheap in-memory scan — cheaper than the dedicated
+    # Every round's H-index aggregation groups by src. Hash-partitioning und
+    # by src inside each round's query (one exchange, reused by every round
+    # a batch composes) leaves the rounds themselves exchange-free: the
+    # broadcast state join keeps und's partitioning (sf0.1: 8.6 s with the
+    # aggregate and window exchanges of every round, 4.7 s without).
+    und_src = und.repartition("src")
+    # h₀ stays LAZY (round 10): each consumer (the probe job, the first
+    # round's broadcast build, the fixpoint SUM) recomputes the degree
+    # aggregate from the materialized und — cheaper than the dedicated
     # checkpoint job + py4j round-trip the eager form paid.
     h = und.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).cast("long").alias("core")
@@ -2616,41 +2393,35 @@ def core_decomposition(
         nv = h.count()
     # Join-strategy gate (guide §3.1, decided ONCE from a real count, not an
     # estimate): broadcast the |V|-row state per round when it fits, which
-    # removes every per-round Exchange (und is pre-partitioned by src and
-    # the broadcast join preserves that); past the cap, fall back to the
-    # shuffle join — und's recorded partitioning still saves its side.
-    bcast_state = nv <= _loop_bcast_rows()
+    # removes the per-round shuffle of the |E|-row und side; past the cap,
+    # fall back to the shuffle join.
+    bcast_state = nv <= LOOP_BCAST_ROWS
 
     def _hj(cur: DataFrame) -> DataFrame:
         j = cur.select(F.col("id").alias("dst"), F.col("core").alias("nv"))
         return F.broadcast(j) if bcast_state else j
 
+
     if not delta:
         prev_sum = None
         if rounds is None:
             prev_sum = h.agg(F.sum("core")).collect()[0][0]
-        # Round 9: in fixed-rounds mode, compose SPARK_GRAFT_COREDEC_ROUND_BATCH
-        # h-index iterations (default 4 — measured best of {1,2,4} at
+        # Round 9: in fixed-rounds mode, compose COREDEC_ROUND_BATCH
+        # h-index iterations (4 — measured best of {1,2,4} at
         # sf0.1: mins 2.36/3.36 → 2.25/2.50, value-identical) into each
-        # checkpointed query — the rounds are exchange-free stages chained
-        # by broadcast builds, so batching cuts the per-round driver
+        # checkpointed query — the rounds are stages chained by
+        # broadcast builds, so batching cuts the per-round driver
         # latency (ckpt job + py4j round-trip + AQE re-plan) to one per
         # batch. Checkpoint discipline is retained at batch boundaries
         # (executor loss recomputes at most one batch). Fixpoint mode
         # stays per-round (the 1-row SUM probe needs each iterate).
-        import os
-
-        step = 1
-        if rounds is not None:
-            step = max(
-                1, int(os.environ.get("SPARK_GRAFT_COREDEC_ROUND_BATCH", "4"))
-            )
+        step = COREDEC_ROUND_BATCH if rounds is not None else 1
         i = 0
         while True:
             todo = min(step, rounds - i) if rounds is not None else 1
             cur_h = h
             for _ in range(todo):
-                nv = und.join(_hj(cur_h), "dst").select(
+                nv = und_src.join(_hj(cur_h), "dst").select(
                     F.col("src").alias("id"), "nv"
                 )
                 cur_h = _hindex_histogram(nv)
@@ -2683,7 +2454,7 @@ def core_decomposition(
             newh.join(h, "id")
             .filter(F.col("core2") != F.col("core"))
             .select("id", F.col("core2").alias("core"))
-            .localCheckpoint()
+            .transform(_ckpt)
         )
         i += 1
         n_changed = changed.count()
@@ -3004,7 +2775,7 @@ def hits_scores(
     Bounds: values ≤ n·d_max^(2k), so iterations is capped at 8 and the
     caller owns n·d_max^(2k) < 2^63 (same documented contract as
     eigenvector_scaled / katz). Scale: per-iteration cost is two
-    edges-sized shuffles with map-side combine; rounds localCheckpoint so
+    edges-sized shuffles with map-side combine; rounds checkpoint (_ckpt) so
     lineage stays flat at any k."""
     if not 1 <= iterations <= 8:
         raise ValueError("need 1 <= iterations <= 8")
@@ -3017,7 +2788,7 @@ def hits_scores(
     )
     h = nodes.withColumn("hub", F.lit(1).cast("long"))
     a = None
-    lazy = _iter_lazy(iterations)
+    lazy = iterations <= ITER_LAZY
     for _ in range(iterations):
         contrib_a = (
             e.join(h, e["src"] == h["id"])
@@ -3031,7 +2802,7 @@ def hits_scores(
             "id", F.coalesce(F.col("s"), F.lit(0)).cast("long").alias("auth")
         )
         if not lazy:
-            a = a.localCheckpoint()
+            a = _ckpt(a)
         contrib_h = (
             e.join(a, e["dst"] == a["id"])
             .select(F.col("src"), F.col("auth").alias("c"))
@@ -3044,7 +2815,7 @@ def hits_scores(
             "id", F.coalesce(F.col("s"), F.lit(0)).cast("long").alias("hub")
         )
         if not lazy:
-            h = h.localCheckpoint()
+            h = _ckpt(h)
     out = a.join(h, "id").select("id", "auth", "hub")
     if not normalized:
         return out
@@ -3091,7 +2862,7 @@ def topological_levels(
     maxDistanceFromSource). Each round is one aggregate over live edges +
     an anti-join; the live set only shrinks, so total work is
     O(depth · live-|E|) with the usual map-side combine, and rounds
-    localCheckpoint to keep lineage flat. A 1-row count probe per round
+    checkpoint (_ckpt) to keep lineage flat. A 1-row count probe per round
     detects stalls: live nodes remaining with nothing removable means a
     cycle → GraphContainsCycleError (stock parity: the proc FAILS on
     non-DAGs). ``max_rounds`` is the round-unrollable oracle budget
@@ -3116,7 +2887,7 @@ def topological_levels(
         targets = live_e.select(F.col("dst").alias("id")).distinct()
         removed = live_n.join(targets, "id", "left_anti").select(
             "id", F.lit(rounds).cast("long").alias("dist")
-        ).localCheckpoint()
+        ).transform(_ckpt)
         n_removed = removed.count()
         if n_removed == 0:
             if live_n.isEmpty():
@@ -3128,10 +2899,10 @@ def topological_levels(
                 )
             break
         out = removed if out is None else out.unionByName(removed)
-        live_n = live_n.join(removed, "id", "left_anti").localCheckpoint()
+        live_n = live_n.join(removed, "id", "left_anti").transform(_ckpt)
         live_e = live_e.join(
             removed.select(F.col("id").alias("src")), "src", "left_anti"
-        ).localCheckpoint()
+        ).transform(_ckpt)
         rounds += 1
     if out is None:
         return live_n.select("id", F.lit(0).cast("long").alias("dist")).filter(
@@ -3563,8 +3334,8 @@ def node_similarity_topk(
         # that gated this path), floored at the session's shuffle
         # partitions: scale-adaptive, never 1 (guide §2.5 input-size
         # derivation). And when the packed member table is small enough
-        # to broadcast (|E| rows ≤ $SPARK_GRAFT_NODESIM_MEMB_BCAST_ROWS,
-        # default 4M ≈ 64 MB framed), the guide-§8 move applies: ship the
+        # to broadcast (|E| rows ≤ NODESIM_MEMB_BCAST_ROWS,
+        # 4M ≈ 64 MB framed), the guide-§8 move applies: ship the
         # tiny proxy once and pre-partition ep by src, so the exploded
         # payload is BORN on its final groupBy(a) partitioning and never
         # crosses the wire at all (plan: zero Exchange between the attach
@@ -3575,12 +3346,7 @@ def node_similarity_topk(
             n_parts = max(base_parts, int(sum_df2 * 8 // (64 << 20)) + 1)
         else:
             n_parts = base_parts
-        import os
-
-        memb_cap = int(
-            os.environ.get("SPARK_GRAFT_NODESIM_MEMB_BCAST_ROWS", "4000000")
-        )
-        if n_edges is not None and n_edges <= memb_cap:
+        if n_edges is not None and n_edges <= NODESIM_MEMB_BCAST_ROWS:
             ga = (
                 ep.repartition(n_parts, "src")
                 .join(F.broadcast(dstlist), "dst")
@@ -3947,29 +3713,6 @@ def k_truss(
     the re-execution lineage exactly like k_core's peel."""
     if k < 3:
         raise ValueError("k-truss needs k >= 3 (k-2 >= 1 triangles)")
-    import os
-
-    # Round 10 (profile finding — the same shape _fine_coalesce fixed for
-    # the sigma BFS in round 9): the wedge+closing+support stage is
-    # CPU-DENSE per byte, and AQE's byte-based coalescing ran it on 12 of
-    # 32 cores at sf0.1 (stage 58: 15.6 s executor time / 12 tasks over a
-    # 13.9 MB input; the orient/live materialization coalesced to ONE
-    # task). The fine window keeps those stages wide; at cluster volumes
-    # the exchanges carry GBs, coalescing never engages, and the window
-    # is a no-op (AQE only MERGES partitions — the partition ceiling is
-    # still the session's shuffle partitions). Env-gated for A/B.
-    _fine_sites = {
-        s
-        for s in os.environ.get("SPARK_GRAFT_KTRUSS_FINE", "state").split(",")
-        if s
-    }
-
-    _adv = os.environ.get("SPARK_GRAFT_KTRUSS_ADVISORY", "256k")
-
-    def _mat(df: DataFrame, site: str = "other") -> DataFrame:
-        if site in _fine_sites and not reliable_checkpoint:
-            return _ckpt_fine(df, advisory=_adv)
-        return _ckpt(df, reliable_checkpoint)
 
     canonical = (
         edges.select(
@@ -3980,7 +3723,7 @@ def k_truss(
         .distinct()
     )
     # materialized once: every round self-joins the live set three times
-    live = _mat(_orient_edges(canonical), "live")
+    live = _ckpt(_orient_edges(canonical), reliable_checkpoint)
     # the count is ~free on the just-materialized checkpoint and gates the
     # closing-join strategy (broadcast prefilter vs shuffle-hash — see
     # _triangle_support). Peeling only REMOVES edges, so once m is at or
@@ -4034,14 +3777,14 @@ def k_truss(
 
         _log_enum(1, m)
         sup = _triangle_support(live, m, hash_broadcast_cap_edges)
-        state = _mat(
+        state = _ckpt(
             live.join(sup, ["u", "v"], "left").select(
                 "u",
                 "v",
                 "dv",
                 F.coalesce(F.col("support"), F.lit(0)).alias("support"),
             ),
-            "state",
+            reliable_checkpoint,
         )
         n_live = m
         i = 1
@@ -4098,9 +3841,9 @@ def k_truss(
                     ).alias("support"),
                 )
                 if not last:
-                    state = _mat(state, "state")
+                    state = _ckpt(state, reliable_checkpoint)
             else:
-                live2 = _mat(kept.select("u", "v", "dv"), "live")
+                live2 = _ckpt(kept.select("u", "v", "dv"), reliable_checkpoint)
                 sup2 = _triangle_support(
                     live2, n_live_after, hash_broadcast_cap_edges
                 )
@@ -4111,7 +3854,7 @@ def k_truss(
                     F.coalesce(F.col("support"), F.lit(0)).alias("support"),
                 )
                 if not last:
-                    state = _mat(state, "state")
+                    state = _ckpt(state, reliable_checkpoint)
             n_live = n_live_after
             i += 1
     i = 0
@@ -4143,11 +3886,11 @@ def k_truss(
         if rounds is not None:
             if i >= rounds:
                 return kept.select(*out_cols)
-            live = _mat(kept.select("u", "v", "dv"), "live")
+            live = _ckpt(kept.select("u", "v", "dv"), reliable_checkpoint)
             if m > hash_broadcast_cap_edges:
                 m = live.count()
             continue
-        kept = _mat(kept, "state")
+        kept = _ckpt(kept, reliable_checkpoint)
         n = kept.count()
         if prev_n is not None and n == prev_n:
             return kept.select(*out_cols)
@@ -4188,7 +3931,7 @@ def var_length_paths(
 
     Scale: output-sized by construction -- each round joins the CURRENT
     path frontier against the edge table on its last node, so per-round
-    shuffle = frontier size x avg out-degree, and rounds localCheckpoint to
+    shuffle = frontier size x avg out-degree, and rounds checkpoint (_ckpt) to
     keep lineage flat. Path count grows combinatorially on dense graphs;
     that is inherent to per-path semantics (Neo4j explodes identically) --
     callers who only need reachability should use ``k_hop``. The
@@ -4228,10 +3971,10 @@ def var_length_paths(
         )
         .localCheckpoint()
     )
-    # Round 9: lazy small-hi unroll (shared _bfs_lazy_k gate) — measured
+    # Round 9: lazy small-hi unroll (shared BFS_LAZY_K gate) — measured
     # on graph_path_enumeration; the doubly-consumed per-hop frontier
     # (next hop + the output union) is cheap to recompute at small hi
-    lazy = hi <= _bfs_lazy_k()
+    lazy = hi <= BFS_LAZY_K
     out = frontier if lo <= 1 else None
     for _hop in range(2, hi + 1):
         frontier = (
@@ -4244,7 +3987,7 @@ def var_length_paths(
             )
         )
         if not lazy:
-            frontier = frontier.localCheckpoint()
+            frontier = _ckpt(frontier)
             if frontier.isEmpty():
                 break
         if _hop >= lo:
@@ -4295,7 +4038,7 @@ def shortest_paths(
     are extended, and an anti-join against the visited pair set drops
     non-shortest extensions, so state is bounded by shortest-path count,
     not all-walk count (the prefix property makes extending only shortest
-    prefixes exact). Rounds localCheckpoint to keep lineage flat; early
+    prefixes exact). Rounds checkpoint (_ckpt) to keep lineage flat; early
     exit on an empty frontier."""
     if mode not in ("all", "one"):
         raise ValueError("mode must be 'all' or 'one'")
@@ -4310,9 +4053,9 @@ def shortest_paths(
             e.select(F.col("dst").alias("_last"), F.col("src").alias("_next"))
         )
     step = step.localCheckpoint()  # re-joined every level
-    # Round 9: lazy small-k unroll (shared _bfs_lazy_k gate, same
+    # Round 9: lazy small-k unroll (shared BFS_LAZY_K gate, same
     # rationale and A/B discipline as k_hop / multi_source_bfs_levels)
-    lazy = max_hops <= _bfs_lazy_k()
+    lazy = max_hops <= BFS_LAZY_K
     sd = seeds.select("id").distinct()
     # visited (seed, node) pairs; seeds start visited (excludes hop-0 pairs)
     visited = sd.select(
@@ -4339,7 +4082,7 @@ def shortest_paths(
             frontier.select("_src", F.col("_last").alias("_node")).distinct()
         )
         if not lazy:
-            visited = visited.localCheckpoint()
+            visited = _ckpt(visited)
         ext = (
             frontier.join(step, "_last")
             .select(
@@ -4355,7 +4098,7 @@ def shortest_paths(
             "left_anti",
         )
         if not lazy:
-            frontier = frontier.localCheckpoint()
+            frontier = _ckpt(frontier)
             if frontier.isEmpty():
                 break
         out = out.unionByName(frontier)
@@ -4401,7 +4144,7 @@ def cheapest_path_costs(
     bookkeeping is needed. Output: ``(src, dst, cost)``; dst != src.
 
     Scale: per-round shuffle = reached pairs × avg degree, map-side
-    combined into the groupBy-min; rounds localCheckpoint. At 1000× the
+    combined into the groupBy-min; rounds checkpoint (_ckpt). At 1000× the
     round count stays max_hops; only pair cardinality grows."""
     if max_hops < 1 or max_hops > 10:
         raise ValueError("need 1 <= max_hops <= 10")
@@ -4421,10 +4164,10 @@ def cheapest_path_costs(
             )
         )
     step = step.localCheckpoint()  # re-joined every relaxation round
-    # Round 9: lazy small-k unroll (shared _bfs_lazy_k gate) — each round
+    # Round 9: lazy small-k unroll (shared BFS_LAZY_K gate) — each round
     # ends in the groupBy-min aggregate, so the doubly-consumed previous
     # round (union + join legs) dedups at its exchange
-    lazy = max_hops <= _bfs_lazy_k()
+    lazy = max_hops <= BFS_LAZY_K
     best = (
         seeds.select("id")
         .distinct()
@@ -4448,7 +4191,7 @@ def cheapest_path_costs(
             .agg(F.min("_cost").alias("_cost"))
         )
         if not lazy:
-            best = best.localCheckpoint()
+            best = _ckpt(best)
     return best.filter(F.col("_node") != F.col("_src")).select(
         F.col("_src").alias("src"),
         F.col("_node").alias("dst"),
@@ -4503,7 +4246,7 @@ def bellman_ford_costs(
 
     Scale: per-round shuffle = |frontier| × avg out-degree (map-side
     combined into the min) + one |state|-row anti-join merge; rounds
-    localCheckpoint so lineage stays flat. Late rounds touch only the
+    checkpoint (_ckpt) so lineage stays flat. Late rounds touch only the
     still-improving fringe instead of all reached pairs — the same
     delta discipline as k-core/k-truss. Returns ``(src, dst, cost
     long)`` including the (seed, seed, ≤0) row when a negative walk
@@ -4551,7 +4294,7 @@ def bellman_ford_costs(
                 F.col("_cost").isNull() | (F.col("_cc") < F.col("_cost"))
             )
             .select("_src", "_node", F.col("_cc").alias("_cost"))
-            .localCheckpoint()
+            .transform(_ckpt)
         )
         rounds += 1
         # an empty improvement frame IS the fixpoint (also what makes an
@@ -4563,7 +4306,7 @@ def bellman_ford_costs(
         best = (
             best.join(imp, ["_src", "_node"], "left_anti")
             .unionByName(imp)
-            .localCheckpoint()
+            .transform(_ckpt)
         )
         delta = imp
         if max_rounds is not None:
@@ -4715,7 +4458,7 @@ def deterministic_walks(
     Scale: walk state is one row per walk; each step is one equi-join on
     the current node plus a per-walk window (partition = (start, wid),
     a few neighbor rows each — no skew: the window key is the walk, not
-    the hub node). Steps localCheckpoint to keep lineage flat; cost per
+    the hub node). Steps checkpoint (_ckpt) to keep lineage flat; cost per
     step is walks × avg-degree."""
     from pyspark.sql.window import Window
 
@@ -4777,7 +4520,7 @@ def deterministic_walks(
                 F.concat("walk", F.array("_v")).alias("walk"),
                 F.col("_v").alias("_last"),
             )
-            .localCheckpoint()
+            .transform(_ckpt)
         )
     out = frontier if done is None else frontier.unionByName(done)
     return out.select(F.col("id").alias("start"), "wid", "walk")
@@ -4866,7 +4609,7 @@ def _hashmax_fixpoint(
     a node's label is always an ancestor-or-self, and an ancestor's
     ancestors are the node's ancestors; labels grow monotonically to the
     max-ancestor fixpoint in O(log diameter) rounds."""
-    lab = _pq_ckpt(nodes.select("id", F.col("id").alias("lab")), reliable)
+    lab = _ckpt(nodes.select("id", F.col("id").alias("lab")), reliable)
     for _ in range(max_iterations):
         # both the edge step and the jump read the CHECKPOINTED previous
         # labels (jumping off the freshly-updated frame would re-evaluate
@@ -4898,7 +4641,7 @@ def _hashmax_fixpoint(
                 ).alias("_changed"),
             )
         )
-        new = _pq_ckpt(new.withColumnRenamed("new_lab", "lab"), reliable)
+        new = _ckpt(new.withColumnRenamed("new_lab", "lab"), reliable)
         n_changed = new.filter(F.col("_changed")).count()
         lab = new.drop("_changed")
         if n_changed == 0:
@@ -4945,7 +4688,7 @@ def strongly_connected_components(
     guards pathological chains — exceeded raises rather than returning a
     partial answer. At 100 TB scale each step is shuffle-on-node-id sized
     and the giant-SCC case (web graphs) converges in a handful of rounds;
-    per-step ``localCheckpoint`` (or reliable ``checkpoint`` when
+    per-step :func:`_ckpt` (``localCheckpoint``, or reliable ``checkpoint`` when
     ``checkpoint_dir`` is set) keeps lineage flat exactly as the
     ``connected_components`` loop rehearsed to 390M edges.
 
@@ -4979,8 +4722,8 @@ def strongly_connected_components(
     )
     if nodes is not None:
         n = n.unionByName(nodes.select("id"))
-    remaining = _pq_ckpt(n.distinct(), reliable)
-    e = _pq_ckpt(e, reliable)
+    remaining = _ckpt(n.distinct(), reliable)
+    e = _ckpt(e, reliable)
     # empty accumulator up front so an empty/all-self-loop graph returns an
     # empty 2-col frame instead of crashing on done=None
     done: DataFrame = remaining.select(
@@ -5012,7 +4755,7 @@ def strongly_connected_components(
             # endpoint projections (saves two shuffles per pass)
             has_out = e.select(F.col("src").alias("id"))
             has_in = e.select(F.col("dst").alias("id"))
-            trimmed = _pq_ckpt(  # materialize once; reused by 3 plans below
+            trimmed = _ckpt(  # materialize once; reused by 3 plans below
                 remaining.join(has_out, "id", "left_anti")
                 .unionByName(remaining.join(has_in, "id", "left_anti"))
                 .distinct(),
@@ -5021,10 +4764,10 @@ def strongly_connected_components(
             if trimmed.isEmpty():
                 break
             done = _accum(done, trimmed.select("id", F.col("id").alias("scc")))
-            remaining = _pq_ckpt(
+            remaining = _ckpt(
                 remaining.join(trimmed, "id", "left_anti"), reliable
             )
-            e = _pq_ckpt(
+            e = _ckpt(
                 e.join(trimmed.withColumnRenamed("id", "src"), "src", "left_anti")
                 .join(trimmed.withColumnRenamed("id", "dst"), "dst", "left_anti")
                 .select("src", "dst"),
@@ -5040,7 +4783,7 @@ def strongly_connected_components(
         # within each class over REVERSED class edges. The class root r is
         # the class's max id, so v belongs to r's SCC  ⟺  v reaches r
         # within the class  ⟺  bcolor(v) == color(v).
-        ce = _pq_ckpt(
+        ce = _ckpt(
             e.join(
                 color.select(F.col("id").alias("src"), F.col("lab").alias("c1")),
                 "src",
@@ -5064,13 +4807,13 @@ def strongly_connected_components(
         # chain that otherwise grows one leg per trim pass + round, and a
         # few hundred legs turn Catalyst planning itself into the
         # bottleneck (observed: minutes of driver-side CPU, zero jobs)
-        done = _pq_ckpt(
+        done = _ckpt(
             _accum(done, scc_nodes.join(labels, "color").select("id", "scc")),
             reliable,
         )
-        marked = _pq_ckpt(scc_nodes.select("id"), reliable)
-        remaining = _pq_ckpt(remaining.join(marked, "id", "left_anti"), reliable)
-        e = _pq_ckpt(
+        marked = _ckpt(scc_nodes.select("id"), reliable)
+        remaining = _ckpt(remaining.join(marked, "id", "left_anti"), reliable)
+        e = _ckpt(
             e.join(marked.withColumnRenamed("id", "src"), "src", "left_anti")
             .join(marked.withColumnRenamed("id", "dst"), "dst", "left_anti")
             .select("src", "dst"),

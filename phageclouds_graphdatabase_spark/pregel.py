@@ -5,8 +5,9 @@ Bulk-synchronous vertex programs: per superstep, message expressions are
 evaluated over edge triplets (``Pregel.src/dst/edge`` anchors), delivered
 messages aggregate per vertex (``aggMsgs``), and each registered vertex
 column updates from its old value plus ``Pregel.msg()``. Everything is one
-Catalyst plan per superstep; rounds ``localCheckpoint`` on the configured
-interval to keep lineage flat (the iterative-Spark failure mode).
+Catalyst plan per superstep; rounds checkpoint (``operators.graph._ckpt``)
+on the configured interval to keep lineage flat (the iterative-Spark
+failure mode).
 
 Usage (2-iteration integer PageRank, the operators/graph.py twin)::
 
@@ -35,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from phageclouds_graphdatabase_spark.operators.graph import _ckpt
 
 _MSG = "_pregel_msg_"
 
@@ -150,5 +153,5 @@ class Pregel:
                 *[upd.alias(n) for n, _, upd in self._vcols],
             )
             if i % self._ckpt_interval == 0 or i == self._max_iter:
-                v = v.localCheckpoint()
+                v = _ckpt(v)
         return v

@@ -1,0 +1,184 @@
+"""Iterative-loop layer of operators/graph.py: the one checkpoint helper
+``_ckpt`` and the lazy/eager gates of the bounded loops.
+
+- Loop-state statistics stay bounded: every frame ``_ckpt`` returns has a
+  plan size estimate of constant width, however many rounds a loop runs.
+  A checkpointed LogicalRDD that kept its origin plan's estimate grew it
+  by digits per round (the cost of a round then tracked the round number,
+  not the live data).
+- A reliable cut with no checkpoint directory fails with a clear error.
+- Every lazy gate is value-gated: the eager (checkpointed) and lazy
+  (composed) paths give identical rows on the same input. The module
+  constants are the very gates the operators read, so patching them
+  exercises both code paths.
+"""
+from __future__ import annotations
+
+import random
+
+import pytest
+
+import phageclouds_graphdatabase_spark.operators.graph as G
+from phageclouds_graphdatabase_spark.graphframe import GraphFrame
+from phageclouds_graphdatabase_spark.operators.dedup import jaccard_pairs_capped
+
+# ---------------------------------------------------------------------------
+# _ckpt: bounded statistics, reliable-cut guard
+# ---------------------------------------------------------------------------
+
+
+def _shuffled_path(spark, n):
+    # a path under a random labelling: min-label propagation needs many
+    # rounds, so a per-round blow-up has room to show
+    ids = list(range(n))
+    random.Random(7).shuffle(ids)
+    return spark.createDataFrame(list(zip(ids, ids[1:])), "src long, dst long")
+
+
+# hashmin needs O(diameter) rounds (1,311 on the 3,000-node path), so it
+# runs on a 60-node path, which takes 17 rounds inside max_iterations=50
+@pytest.mark.parametrize("method,n", [("contract", 3000), ("hashmin", 60)])
+def test_loop_state_stats_stay_bounded(spark, monkeypatch, method, n):
+    edges = _shuffled_path(spark, n)
+    bits = []
+    real_ckpt = G._ckpt
+
+    def spy(df, reliable=False):
+        out = real_ckpt(df, reliable)
+        # py4j hands the scala BigInt over as a Python int; count its bits,
+        # never its decimal digits (str() refuses ints past 4,300 digits)
+        size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        bits.append(size.bit_length())
+        assert bits[-1] <= 64, bits  # fail at the first runaway cut
+        return out
+
+    monkeypatch.setattr(G, "_ckpt", spy)
+    got = G.connected_components(
+        edges, method=method, local_threshold=0, relabel_ids=False
+    )
+    got = sorted(map(tuple, got.collect()))
+    monkeypatch.undo()
+    assert len(bits) >= 15, bits
+    want = sorted(map(tuple, G._components_local(edges, None).collect()))
+    assert got == want
+
+
+def test_reliable_ckpt_without_dir_fails_clearly(spark, monkeypatch):
+    # the session's SparkContext may carry a dir set by another test;
+    # present it as unset
+    monkeypatch.setattr(type(spark.sparkContext), "getCheckpointDir", lambda self: None)
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        G._ckpt(spark.range(3), reliable=True)
+    sh = spark.createDataFrame([(1, "a"), (2, "a")], "doc_id long, shingle string")
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        jaccard_pairs_capped(sh, freq_cap=10, reliable_checkpoint=True)
+
+
+# ---------------------------------------------------------------------------
+# lazy/eager gates of the bounded loops
+# ---------------------------------------------------------------------------
+
+_GATES = ("BFS_LAZY_K", "ITER_LAZY", "FASTRP_LAZY_ITERS", "COREDEC_ROUND_BATCH")
+
+
+@pytest.fixture
+def toggle(monkeypatch):
+    """Set every lazy gate constant to one value; restored after."""
+
+    def set_all(val: int) -> None:
+        for name in _GATES:
+            monkeypatch.setattr(G, name, val)
+
+    return set_all
+
+
+def _rows(df):
+    return sorted(map(str, df.collect()))
+
+
+EDGES = [
+    ("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("b", "d"),
+    ("e", "f"), ("f", "g"), ("a", "e"), ("g", "h"), ("h", "e"),
+]
+
+
+@pytest.fixture
+def edges_df(spark):
+    return spark.createDataFrame(EDGES, "src string, dst string")
+
+
+@pytest.fixture
+def wedges_df(spark):
+    rows = [(s, d, 1.0 + (i % 3)) for i, (s, d) in enumerate(EDGES)]
+    return spark.createDataFrame(rows, "src string, dst string, distance double")
+
+
+def _eager_vs_lazy(toggle, build):
+    toggle(0)
+    eager = _rows(build())
+    toggle(8)
+    lazy = _rows(build())
+    assert eager == lazy and eager  # identical and non-empty
+    return eager
+
+
+def test_bfs_primitives_lazy_identical(spark, toggle, edges_df):
+    roots = spark.createDataFrame([("a",), ("e",)], "id string")
+    _eager_vs_lazy(
+        toggle,
+        lambda: G.multi_source_bfs_levels(roots, edges_df, k=3, directed=False),
+    )
+    _eager_vs_lazy(
+        toggle, lambda: G.bfs_sigma(roots, edges_df, k=3, directed=True)
+    )
+    _eager_vs_lazy(toggle, lambda: G.k_hop(roots, edges_df, k=3, directed=False))
+
+
+def test_path_family_lazy_identical(spark, toggle, edges_df, wedges_df):
+    seeds = spark.createDataFrame([("a",), ("g",)], "id string")
+    _eager_vs_lazy(
+        toggle,
+        lambda: G.shortest_paths(seeds, edges_df, max_hops=3, directed=False),
+    )
+    _eager_vs_lazy(
+        toggle,
+        lambda: G.var_length_paths(seeds, edges_df, lo=1, hi=3, directed=True),
+    )
+    _eager_vs_lazy(
+        toggle,
+        lambda: G.cheapest_path_costs(
+            seeds, wedges_df, max_hops=3, directed=False
+        ),
+    )
+
+
+def test_linear_centrality_loops_lazy_identical(spark, toggle, edges_df):
+    seeds = spark.createDataFrame([("a",)], "id string")
+    _eager_vs_lazy(toggle, lambda: G.pagerank_scaled(edges_df, iterations=2))
+    _eager_vs_lazy(
+        toggle,
+        lambda: G.personalized_pagerank_scaled(edges_df, seeds, iterations=2),
+    )
+    _eager_vs_lazy(
+        toggle, lambda: G.katz_centrality_scaled(edges_df, iterations=2)
+    )
+    _eager_vs_lazy(toggle, lambda: G.eigenvector_scaled(edges_df, iterations=2))
+    _eager_vs_lazy(toggle, lambda: G.hits_scores(edges_df, iterations=2))
+    _eager_vs_lazy(toggle, lambda: G.fastrp_embeddings(edges_df, iters=2))
+
+
+def test_labelprop_lazy_identical(spark, toggle, edges_df):
+    v = spark.createDataFrame(
+        [(x,) for x in "abcdefgh"], "id string"
+    )
+    _eager_vs_lazy(
+        toggle, lambda: GraphFrame(v, edges_df).labelPropagation(2)
+    )
+
+
+def test_coredec_round_batch_identical(spark, toggle, edges_df):
+    toggle(1)  # one h-index round per checkpoint
+    one = _rows(G.core_decomposition(edges_df, rounds=5))
+    toggle(3)
+    batched = _rows(G.core_decomposition(edges_df, rounds=5))
+    assert one == batched and one

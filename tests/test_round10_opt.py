@@ -114,40 +114,6 @@ def test_coredec_auto_fires_once_then_packs(spark, monkeypatch):
     assert len(calls) == 1
 
 
-def test_conf_windows_serialize(spark):
-    # VERDICT r9 "What's wrong" #2: two conf-window helpers running on
-    # concurrent driver threads must serialize — a query planned inside
-    # another thread's window would inherit AQE-off / fine coalescing.
-    import threading
-    import time
-
-    events = []
-
-    def hold_fine_window():
-        with G._fine_coalesce(spark):
-            events.append("a_in")
-            time.sleep(0.4)
-            events.append("a_out")
-
-    ta = threading.Thread(target=hold_fine_window)
-    ta.start()
-    time.sleep(0.1)
-    assert "a_in" in events  # the window is open on the other thread
-    out = G._ckpt_noaqe(spark.range(5), False)  # must block until a_out
-    events.append("b_done")
-    ta.join()
-    assert events.index("a_out") < events.index("b_done")
-    assert out.count() == 5
-    # every temporary conf restored
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert (
-        spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize", None
-        )
-        is None
-    )
-
-
 def test_stream_source_bytes_and_derived_partitions(spark, tmp_path, monkeypatch):
     from phageclouds_graphdatabase_spark.streaming import events as E
 

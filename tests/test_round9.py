@@ -161,40 +161,6 @@ def test_nodesim_capped_delegate_still_identical(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-9: _mem_ckpt private-API fallback pin (VERDICT r8 "What's wrong" #4)
-# ---------------------------------------------------------------------------
-
-def test_mem_ckpt_fallback_engages_and_preserves_louvain(spark, monkeypatch):
-    # force the internalCreateDataFrame seam to fail the way a Spark
-    # upgrade would; _mem_ckpt must (a) fall back to the parquet
-    # round-trip and (b) leave Louvain's output identical
-    e = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("a", "c"),
-         ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")],
-        "src string, dst string",
-    )
-    base = sorted((r.id, r.label)
-                  for r in G.louvain_refine(e, rounds=2).collect())
-
-    calls = {"fallback": 0}
-    orig_pq = G._pq_ckpt
-
-    def spy_pq(df, reliable):
-        calls["fallback"] += 1
-        return orig_pq(df, reliable)
-
-    def broken_rebuild(ck):
-        raise RuntimeError("simulated Spark upgrade: private API moved")
-
-    monkeypatch.setattr(G, "_internal_df_rebuild", broken_rebuild)
-    monkeypatch.setattr(G, "_pq_ckpt", spy_pq)
-    got = sorted((r.id, r.label)
-                 for r in G.louvain_refine(e, rounds=2).collect())
-    assert got == base
-    assert calls["fallback"] > 0, "parquet fallback never engaged"
-
-
-# ---------------------------------------------------------------------------
 # Round-9 harmonic exact parity opt-in (VERDICT r8 "What's missing" #1)
 # ---------------------------------------------------------------------------
 

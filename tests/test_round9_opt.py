@@ -1,137 +1,9 @@
-"""Round-9 optimization differential pins.
+"""Round-9 optimization pins: the streaming state-partition window.
 
-Every round-9 latency optimization that changed an operator's INTERNALS
-(lazy small-k unroll of bounded loops, coredec round batching) is
-value-gated here: the eager (checkpointed) and lazy (composed) paths must
-produce identical rows on the same input. The env knobs are the very
-gates the operators read, so these tests exercise both code paths — a
-future change that breaks either path, or the gate plumbing itself,
-fails loudly.
+The lazy/eager gates of the bounded graph loops are value-gated in
+tests/test_graph_loops.py.
 """
 from __future__ import annotations
-
-import os
-
-import pytest
-
-import phageclouds_graphdatabase_spark.operators.graph as G
-from phageclouds_graphdatabase_spark.graphframe import GraphFrame
-
-
-@pytest.fixture
-def toggle():
-    """Set/unset the round-9 lazy gates around a callable; restore after."""
-    saved = {}
-    keys = (
-        "SPARK_GRAFT_BFS_LAZY_K",
-        "SPARK_GRAFT_ITER_LAZY",
-        "SPARK_GRAFT_FASTRP_LAZY_ITERS",
-        "SPARK_GRAFT_COREDEC_ROUND_BATCH",
-    )
-    for k in keys:
-        saved[k] = os.environ.pop(k, None)
-
-    def set_all(val: str) -> None:
-        for k in keys:
-            os.environ[k] = val
-
-    yield set_all
-    for k, v in saved.items():
-        os.environ.pop(k, None)
-        if v is not None:
-            os.environ[k] = v
-
-
-def _rows(df):
-    return sorted(map(str, df.collect()))
-
-
-EDGES = [
-    ("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("b", "d"),
-    ("e", "f"), ("f", "g"), ("a", "e"), ("g", "h"), ("h", "e"),
-]
-
-
-@pytest.fixture
-def edges_df(spark):
-    return spark.createDataFrame(EDGES, "src string, dst string")
-
-
-@pytest.fixture
-def wedges_df(spark):
-    rows = [(s, d, 1.0 + (i % 3)) for i, (s, d) in enumerate(EDGES)]
-    return spark.createDataFrame(rows, "src string, dst string, distance double")
-
-
-def _eager_vs_lazy(toggle, build):
-    toggle("0")
-    eager = _rows(build())
-    toggle("8")
-    lazy = _rows(build())
-    assert eager == lazy and eager  # identical and non-empty
-    return eager
-
-
-def test_bfs_primitives_lazy_identical(spark, toggle, edges_df):
-    roots = spark.createDataFrame([("a",), ("e",)], "id string")
-    _eager_vs_lazy(
-        toggle,
-        lambda: G.multi_source_bfs_levels(roots, edges_df, k=3, directed=False),
-    )
-    _eager_vs_lazy(
-        toggle, lambda: G.bfs_sigma(roots, edges_df, k=3, directed=True)
-    )
-    _eager_vs_lazy(toggle, lambda: G.k_hop(roots, edges_df, k=3, directed=False))
-
-
-def test_path_family_lazy_identical(spark, toggle, edges_df, wedges_df):
-    seeds = spark.createDataFrame([("a",), ("g",)], "id string")
-    _eager_vs_lazy(
-        toggle,
-        lambda: G.shortest_paths(seeds, edges_df, max_hops=3, directed=False),
-    )
-    _eager_vs_lazy(
-        toggle,
-        lambda: G.var_length_paths(seeds, edges_df, lo=1, hi=3, directed=True),
-    )
-    _eager_vs_lazy(
-        toggle,
-        lambda: G.cheapest_path_costs(
-            seeds, wedges_df, max_hops=3, directed=False
-        ),
-    )
-
-
-def test_linear_centrality_loops_lazy_identical(spark, toggle, edges_df):
-    seeds = spark.createDataFrame([("a",)], "id string")
-    _eager_vs_lazy(toggle, lambda: G.pagerank_scaled(edges_df, iterations=2))
-    _eager_vs_lazy(
-        toggle,
-        lambda: G.personalized_pagerank_scaled(edges_df, seeds, iterations=2),
-    )
-    _eager_vs_lazy(
-        toggle, lambda: G.katz_centrality_scaled(edges_df, iterations=2)
-    )
-    _eager_vs_lazy(toggle, lambda: G.eigenvector_scaled(edges_df, iterations=2))
-    _eager_vs_lazy(toggle, lambda: G.hits_scores(edges_df, iterations=2))
-    _eager_vs_lazy(toggle, lambda: G.fastrp_embeddings(edges_df, iters=2))
-
-
-def test_labelprop_lazy_identical(spark, toggle, edges_df):
-    v = spark.createDataFrame(
-        [(x,) for x in "abcdefgh"], "id string"
-    )
-    _eager_vs_lazy(
-        toggle, lambda: GraphFrame(v, edges_df).labelPropagation(2)
-    )
-
-
-def test_coredec_round_batch_identical(spark, toggle, edges_df):
-    toggle("0")  # batch=0 clamps to 1 (per-round)
-    one = _rows(G.core_decomposition(edges_df, rounds=5))
-    toggle("3")
-    batched = _rows(G.core_decomposition(edges_df, rounds=5))
-    assert one == batched and one
 
 
 def test_stream_state_partitions_env(spark, monkeypatch):

@@ -3,10 +3,12 @@
 
 The tail plan of an iterative query is just `Scan ExistingRDD` (the last
 checkpoint), so `capture_plans.py` can't show what each round does. This
-tool intercepts every checkpoint call (`_ckpt` / `_ckpt_part` / `_mem_ckpt` /
-`DataFrame.localCheckpoint`) during one build+noop run of a suite entry and
-records the FORMATTED PLAN of the frame being materialized — i.e. the real
-per-round join/aggregate plan, Exchange placement and join strategy included.
+tool intercepts every checkpoint call (`operators.graph._ckpt`, the loop-state
+cut, and raw `DataFrame.localCheckpoint`, the one-off static pins) during one
+build+noop run of a suite entry and records the FORMATTED PLAN of the frame
+being materialized — i.e. the real per-round join/aggregate plan, Exchange
+placement and join strategy included. A `_ckpt` cut is recorded once, not
+again for the localCheckpoint it runs inside.
 
 Usage: python tools/capture_iter_plans.py <tag> <query[,query...]>
 Writes plans/r09/<name>_rounds_<tag>.txt
@@ -53,9 +55,13 @@ def main() -> None:
     real_ckpt = G._ckpt
     real_local = DataFrame.localCheckpoint
 
-    def spy_ckpt(df, reliable):
+    def spy_ckpt(df, reliable=False):
         plans.append(f"--- ckpt #{len(plans)} ---\n" + formatted(df))
-        return real_ckpt(df, reliable)
+        DataFrame.localCheckpoint = real_local
+        try:
+            return real_ckpt(df, reliable)
+        finally:
+            DataFrame.localCheckpoint = spy_local
 
     def spy_local(df, eager=True):
         plans.append(f"--- localCheckpoint #{len(plans)} ---\n" + formatted(df))
