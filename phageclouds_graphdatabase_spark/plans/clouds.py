@@ -2,26 +2,38 @@
 single Catalyst plan replacing the reference's 2-3 Neo4j round-trips plus
 driver-side pandas post-processing.
 
-All pipelines share the canonical shape: seed-predicate -> 1-hop expand ->
-induced subgraph -> attribute join -> derived presentation columns. The node
-set is cached and reused across the expand/induced/attribute stages (the
-reference re-ships it as a Python list literal inside each Cypher string,
-/root/reference/phageclouds_gdb.py:65-71).
+The reference's three scripts differ only in their seed predicate and their
+attribute/colour step, so the entry points share one skeleton (`_cloud`):
+seed frame -> 1-hop expand over `distance <= t` -> induced subgraph ->
+members' attribute function -> presentation columns. Each entry point
+supplies only its seed frame and its attribute function.
 
-Golden-parity quirks reproduced on purpose (flags give correct semantics):
+The node set stays a lazy frame: it is neither cached nor collected, so an
+op leaves no persisted state behind and makes no extra round trip to the
+driver. Catalyst recomputes it inside the induced-subgraph and members
+semi-joins (the reference instead re-ships it as a Python list literal
+inside each Cypher string, `phageclouds_gdb.py:65-71`).
+
+Golden-parity quirks reproduced on purpose:
 - expand is DIRECTED-only: edges are stored once per unordered pair and all
-  reference matches are `-[r]->` (SURVEY.md §1.1);
+  reference matches are `-[r]->` (SURVEY.md §1.1). For correct semantics
+  (neighbours along either stored direction) use `G.expand` in its
+  both-ways mode;
+- taxon and host seeds enter the node set only through a qualifying
+  out-edge (non-optional MATCH); family keeps edgeless seeds (OPTIONAL
+  MATCH, J4);
 - host 'harsh' filters source on endpoint *a* only, so excluded-source
   phages still enter as edge targets
   (/root/reference/phageclouds_gdb_host.py:57);
 - host attribute join takes ANY host of each phage (left outer,
-  row-multiplying, then per-key dedup), not the queried one
-  (/root/reference/phageclouds_gdb_host.py:61-62).
+  row-multiplying, then per-key dedup pinned to max(host_genus)), not the
+  queried one (reference `phageclouds_gdb_host.py:61-62`).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,65 +73,74 @@ def _present_edges(
     return edges.select(*cols)
 
 
+def _cloud(
+    kind: str,
+    nodes: DataFrame,
+    edges: DataFrame,
+    seeds: DataFrame,
+    threshold: float,
+    attrs: Callable[[DataFrame], DataFrame],
+) -> CloudResult:
+    """The shared skeleton of the `kind` ('taxon', 'family' or 'host')
+    cloud. `seeds` has one column `id`. `attrs` maps the members (the node
+    rows of the node set, `accession` renamed to `id`) to `id, source,
+    genome_size, <the kind's columns>, color_background, title`; `size`
+    and `color_border` are added here, in that order."""
+    qual = edges.filter(F.col("distance") <= F.lit(threshold))
+    hit = qual.join(G.maybe_broadcast(seeds), qual["src"] == seeds["id"], "left_semi")
+    base = seeds if kind == "family" else hit.select(F.col("src").alias("id"))
+    node_set = base.unionByName(hit.select(F.col("dst").alias("id"))).distinct()
+
+    induced = G.induced_subgraph(node_set, qual)
+
+    members = nodes.join(
+        node_set, nodes["accession"] == node_set["id"], "left_semi"
+    ).withColumnRenamed("accession", "id")
+    out = attrs(members)
+    head = [c for c in out.columns if c not in ("color_background", "title")]
+    out = out.select(
+        *head,
+        derive.node_size(F.col("genome_size")).alias("size"),
+        "color_background",
+        F.lit("#000000").alias("color_border"),
+        "title",
+    )
+    edges_out = _present_edges(induced, threshold, with_title=kind != "taxon")
+    return CloudResult(out, edges_out, threshold)
+
+
+def _ncbi_seeds(nodes: DataFrame, name: str) -> DataFrame:
+    pred = (F.col("source") == "NCBI") & F.col("taxonomy").contains(name)
+    return nodes.filter(pred).select(F.col("accession").alias("id"))
+
+
 def clouds_by_taxon(
     nodes: DataFrame,
     edges: DataFrame,
     taxon: str,
     threshold: float = 0.25,
-    directed: bool = True,
 ) -> CloudResult:
     """E1 -- `phageclouds_gdb.py -t <taxon> -d <dist>`
     (/root/reference/phageclouds_gdb.py:44-120).
 
-    Seeds: NCBI phages whose taxonomy contains `taxon` with at least one
-    qualifying out-edge is NOT required (the expand keeps edgeless seeds out
-    naturally here: the reference's Q1 is a non-optional MATCH, so a seed
-    enters the node set only via an edge row -- reproduced by requiring the
-    edge join before the union).
+    Seeds: NCBI phages whose taxonomy contains `taxon`. Q1 is a
+    non-optional MATCH, so a seed enters the node set only with a
+    qualifying out-edge (reference `phageclouds_gdb.py:56-62`).
     """
-    qual = edges.filter(F.col("distance") <= F.lit(threshold))
-    seed_pred = (F.col("source") == "NCBI") & F.col("taxonomy").contains(taxon)
-    seeds = nodes.filter(seed_pred).select(F.col("accession").alias("id"))
-    # Non-optional MATCH: only seeds that actually have a qualifying
-    # out-edge (and their targets) enter the node set
-    # (/root/reference/phageclouds_gdb.py:56-62).
-    seed_edges = qual.join(G.maybe_broadcast(seeds), qual["src"] == seeds["id"], "left_semi")
-    if directed:
-        node_set = (
-            seed_edges.select(F.col("src").alias("id"))
-            .unionByName(seed_edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    else:
-        incoming = qual.join(G.maybe_broadcast(seeds), qual["dst"] == seeds["id"], "left_semi")
-        node_set = (
-            seed_edges.select(F.col("src").alias("id"))
-            .unionByName(seed_edges.select(F.col("dst").alias("id")))
-            .unionByName(incoming.select(F.col("src").alias("id")))
-            .unionByName(incoming.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    node_set = node_set.cache()
-
-    induced = G.induced_subgraph(node_set, qual)
-
     flag = f"Phage_is_{taxon}"
-    attrs = (
-        nodes.join(node_set, nodes["accession"] == node_set["id"], "left_semi")
-        .withColumn(flag, F.col("taxonomy").contains(taxon))
-        .withColumn("color", derive.taxon_color(F.col("source"), F.col(flag)))
-        .select(
-            F.col("accession").alias("id"),
+
+    def attrs(m: DataFrame) -> DataFrame:
+        is_taxon = F.col("taxonomy").contains(taxon)
+        return m.select(
+            "id",
             "source",
             "genome_size",
-            F.col(flag),
-            derive.node_size(F.col("genome_size")).alias("size"),
-            F.col("color").alias("color_background"),
-            F.lit("#000000").alias("color_border"),
+            is_taxon.alias(flag),
+            derive.taxon_color(F.col("source"), is_taxon).alias("color_background"),
             F.lit(None).cast("string").alias("title"),
         )
-    )
-    return CloudResult(attrs, _present_edges(induced, threshold), threshold)
+
+    return _cloud("taxon", nodes, edges, _ncbi_seeds(nodes, taxon), threshold, attrs)
 
 
 def clouds_by_family(
@@ -139,64 +160,47 @@ def clouds_by_family(
     colormap work of color_phage_tax (:47-66); rank extraction (V5) is a
     lineages join instead of per-row ete3 get_lineage (:68-76).
     """
-    qual = edges.filter(F.col("distance") <= F.lit(threshold))
-    seed_pred = (F.col("source") == "NCBI") & F.col("taxonomy").contains(family)
-    seeds = nodes.filter(seed_pred).select(F.col("accession").alias("id"))
-    node_set = G.expand(seeds, qual).cache()  # keeps edgeless seeds (J4)
-
-    induced = G.induced_subgraph(node_set, qual)
-
     palette = derive.taxon_palette(lineages, family, rank)
 
-    attrs = nodes.join(node_set, nodes["accession"] == node_set["id"], "left_semi").select(
-        F.col("accession").alias("id"),
-        "source",
-        "genome_size",
-        F.col("taxonomy").alias("lineage"),
-    )
-    # First-substring-match against the lineage, in palette order: non-equi
-    # broadcast join + min-index window (the palette is tiny).
-    matched = (
-        attrs.join(
-            F.broadcast(palette),
-            F.col("lineage").contains(F.col("taxon")) & (F.col("source") == "NCBI"),
+    def attrs(m: DataFrame) -> DataFrame:
+        # First-substring-match against the lineage, in palette order:
+        # non-equi broadcast join + min-index window (the palette is tiny).
+        matched = (
+            m.join(
+                F.broadcast(palette),
+                F.col("taxonomy").contains(F.col("taxon")) & (F.col("source") == "NCBI"),
+                "left_outer",
+            )
+            .withColumn(
+                "rn",
+                F.row_number().over(
+                    Window.partitionBy("id").orderBy(F.col("palette_idx").asc_nulls_last())
+                ),
+            )
+            .filter(F.col("rn") == 1)
+        )
+        ranked = matched.join(
+            lineages.select(F.col("accession").alias("id"), F.col(rank).alias("target_taxon")),
+            "id",
             "left_outer",
+        ).withColumn(
+            "target_taxon",
+            F.when(F.col("target_taxon") == "", None).otherwise(F.col("target_taxon")),
         )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("id").orderBy(F.col("palette_idx").asc_nulls_last())
-            ),
+        return ranked.select(
+            "id",
+            "source",
+            "genome_size",
+            "target_taxon",
+            F.when(F.col("source") != "NCBI", "#FFFFFF")
+            .otherwise(F.coalesce(F.col("hex"), F.lit("#000000")))
+            .alias("color_background"),
+            derive.family_title(
+                F.col("source"), F.col("genome_size"), rank, F.col("target_taxon")
+            ).alias("title"),
         )
-        .filter(F.col("rn") == 1)
-        .withColumn(
-            "color",
-            F.when(F.col("source") != "NCBI", "#FFFFFF").otherwise(
-                F.coalesce(F.col("hex"), F.lit("#000000"))
-            ),
-        )
-    )
-    ranked = matched.join(
-        lineages.select(F.col("accession").alias("id"), F.col(rank).alias("target_taxon")),
-        "id",
-        "left_outer",
-    ).withColumn(
-        "target_taxon",
-        F.when(F.col("target_taxon") == "", None).otherwise(F.col("target_taxon")),
-    )
-    out = ranked.select(
-        "id",
-        "source",
-        "genome_size",
-        "target_taxon",
-        derive.node_size(F.col("genome_size")).alias("size"),
-        F.col("color").alias("color_background"),
-        F.lit("#000000").alias("color_border"),
-        derive.family_title(
-            F.col("source"), F.col("genome_size"), rank, F.col("target_taxon")
-        ).alias("title"),
-    )
-    return CloudResult(out, _present_edges(induced, threshold, with_title=True), threshold)
+
+    return _cloud("family", nodes, edges, _ncbi_seeds(nodes, family), threshold, attrs)
 
 
 def clouds_by_host(
@@ -206,7 +210,6 @@ def clouds_by_host(
     host_genus: str,
     threshold: float = 0.25,
     harsh: bool = False,
-    strict_colors: bool = False,
 ) -> CloudResult:
     """E3 -- `phageclouds_gdb_host.py -g <genus> [-t <dist>] [--harsh]`
     (/root/reference/phageclouds_gdb_host.py:44-92).
@@ -219,7 +222,6 @@ def clouds_by_host(
     the reference's dict-update order is nondeterministic, the engine pins
     max(host_genus)).
     """
-    qual = edges.filter(F.col("distance") <= F.lit(threshold))
     hosted = nodes.join(
         infects.filter(F.col("host_genus") == host_genus),
         nodes["accession"] == infects["src"],
@@ -228,38 +230,30 @@ def clouds_by_host(
     if harsh:
         hosted = hosted.filter(F.col("source") != "GTDB_predicted_prophages")
     seeds = hosted.select(F.col("accession").alias("id"))
-    seed_edges = qual.join(G.maybe_broadcast(seeds), qual["src"] == seeds["id"], "left_semi")
-    node_set = (
-        seed_edges.select(F.col("src").alias("id"))
-        .unionByName(seed_edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .cache()
-    )
 
-    induced = G.induced_subgraph(node_set, qual)
-
-    # J5 optional any-host attribute join, row-multiplying, then A4
-    # last-write-wins dedup pinned to a deterministic order.
-    with_host = (
-        nodes.join(node_set, nodes["accession"] == node_set["id"], "left_semi")
-        .join(infects, nodes["accession"] == infects["src"], "left_outer")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("accession").orderBy(F.col("host_genus").desc_nulls_last())
-            ),
+    def attrs(m: DataFrame) -> DataFrame:
+        # J5 optional any-host attribute join, row-multiplying, then A4
+        # last-write-wins dedup pinned to a deterministic order.
+        with_host = (
+            m.join(infects, m["id"] == infects["src"], "left_outer")
+            .withColumn(
+                "rn",
+                F.row_number().over(
+                    Window.partitionBy("id").orderBy(F.col("host_genus").desc_nulls_last())
+                ),
+            )
+            .filter(F.col("rn") == 1)
         )
-        .filter(F.col("rn") == 1)
-    )
-    out = with_host.select(
-        F.col("accession").alias("id"),
-        "source",
-        "genome_size",
-        F.col("genus").alias("phage_genus"),
-        F.col("host_genus").alias("host"),
-        derive.node_size(F.col("genome_size")).alias("size"),
-        derive.source_hex_color(F.col("source"), strict=strict_colors).alias("color_background"),
-        F.lit("#000000").alias("color_border"),
-        derive.host_title(F.col("host_genus"), F.col("genus"), F.col("genome_size")).alias("title"),
-    )
-    return CloudResult(out, _present_edges(induced, threshold, with_title=True), threshold)
+        return with_host.select(
+            "id",
+            "source",
+            "genome_size",
+            F.col("genus").alias("phage_genus"),
+            F.col("host_genus").alias("host"),
+            derive.source_hex_color(F.col("source")).alias("color_background"),
+            derive.host_title(
+                F.col("host_genus"), F.col("genus"), F.col("genome_size")
+            ).alias("title"),
+        )
+
+    return _cloud("host", nodes, edges, seeds, threshold, attrs)

@@ -3917,7 +3917,7 @@ _PHAGE_NODES_SQL = """
 
 
 def clouds_family_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2 end-to-end (clouds_by_family, plans/clouds.py:125): OPTIONAL-MATCH
+    """E2 end-to-end (`clouds.clouds_by_family`): OPTIONAL-MATCH
     expand keeps edgeless family seeds (J4), per-taxon palette from the
     lineages dim with alphabetical index pinning (V3), first-substring-match
     color via min-palette-idx window, rank extraction as a lineages join
@@ -3992,7 +3992,7 @@ LEFT JOIN (SELECT accession, genus FROM pn) l ON f.id = l.accession
 
 
 def clouds_host_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E3 end-to-end (clouds_by_host, plans/clouds.py:203) with
+    """E3 end-to-end (`clouds.clouds_by_host`) with
     harsh=True: existential infects semi-join seeds (P8) with the
     endpoint-a-only harsh source exclusion (the golden-preserved quirk),
     non-optional expand, row-multiplying any-host attribute join (J5) +

@@ -9,6 +9,7 @@ pruning reach the file scan for free (SURVEY.md §4).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,27 +31,33 @@ TESTDATA_TABLES = (
 )
 
 
-# (path, mtime_ns, size) -> inferred StructType. METADATA cache only
+# abspath -> (mtime_ns, size, inferred StructType). METADATA cache only
 # (round 10, guide §1.2/§6): schema inference reads parquet footers on
 # the driver per ``spark.read.parquet`` call — measured 98 ms vs 16 ms
 # with an explicit schema at sf0.1, and every suite entry pays it 2-4×
 # per construction. Caching the inferred schema is the same class of
 # plan-metadata reuse as Spark's own in-session file-listing cache: no
 # row, aggregate or result is reused — every run still scans the
-# parquet — and the key invalidates on any file change (mtime/size).
-_SCHEMA_CACHE: dict[tuple, object] = {}
+# parquet — and an entry is re-inferred on any file change (mtime/size),
+# replacing the old one, so the dict holds one entry per path.
+_SCHEMA_CACHE: dict[str, tuple] = {}
 
 
 def _cached_schema(spark: SparkSession, path: str):
     try:
         st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     except OSError:
         return None
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
+    # A directory's own stat does not change when a part file inside it is
+    # rewritten in place, so a directory dataset is never cached.
+    if stat.S_ISDIR(st.st_mode):
+        return None
+    key = os.path.abspath(path)
+    hit = _SCHEMA_CACHE.get(key)
+    if hit is not None and hit[:2] == (st.st_mtime_ns, st.st_size):
+        return hit[2]
+    schema = spark.read.parquet(path).schema
+    _SCHEMA_CACHE[key] = (st.st_mtime_ns, st.st_size, schema)
     return schema
 
 

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from phageclouds_graphdatabase_spark.plans import clouds
-from phageclouds_graphdatabase_spark.sources import golden
+from phageclouds_graphdatabase_spark.sources import golden, sinks
 
 GOLDEN = "/root/reference/Tequatrovirus_025_clouds.html"
 
@@ -150,6 +150,55 @@ def test_family_uncatalogued_fails_loud(spark, phage_nodes, shares_dna, lineages
     derive.taxon_palette(lineages, "Herelleviridae", "genus").count()
     # strict=False restores the permissive empty palette for unknown names
     assert derive.taxon_palette(lineages, "Nonexistviridae", "genus", strict=False).count() == 0
+
+
+# --- Output contract and persisted state, per entry point -------------------
+
+# Threshold 0.2 is used by no other test, so each cloud plan here is new to
+# the session's cache manager and a leaked `.cache()` would add an RDD.
+CLOUD_CALLS = {
+    "taxon": lambda n, e, inf, lin: clouds.clouds_by_taxon(n, e, "Tequatrovirus", 0.2),
+    "family": lambda n, e, inf, lin: clouds.clouds_by_family(
+        n, e, lin, "Herelleviridae", "genus", 0.2
+    ),
+    "host": lambda n, e, inf, lin: clouds.clouds_by_host(n, e, inf, "Escherichia", 0.2),
+    "host_harsh": lambda n, e, inf, lin: clouds.clouds_by_host(
+        n, e, inf, "Escherichia", 0.2, harsh=True
+    ),
+}
+
+_EDGES = ["src", "dst", "weight", "value", "color"]
+_TAIL = ["size", "color_background", "color_border", "title"]
+
+
+@pytest.mark.parametrize(
+    "kind, node_cols, edge_cols",
+    [
+        ("taxon", ["id", "source", "genome_size", "Phage_is_Tequatrovirus"] + _TAIL, _EDGES),
+        ("family", ["id", "source", "genome_size", "target_taxon"] + _TAIL, _EDGES + ["title"]),
+        ("host", ["id", "source", "genome_size", "phage_genus", "host"] + _TAIL, _EDGES + ["title"]),
+        ("host_harsh", ["id", "source", "genome_size", "phage_genus", "host"] + _TAIL, _EDGES + ["title"]),
+    ],
+)
+def test_cloud_output_columns(spark, phage_nodes, shares_dna, infects, lineages,
+                              kind, node_cols, edge_cols):
+    # perfbench and the verify_local clouds entries read these names in order
+    res = CLOUD_CALLS[kind](phage_nodes, shares_dna, infects, lineages)
+    assert res.nodes.columns == node_cols
+    assert res.edges.columns == edge_cols
+
+
+@pytest.mark.parametrize("kind", sorted(CLOUD_CALLS))
+def test_cloud_op_leaves_no_persisted_state(spark, phage_nodes, shares_dna, infects,
+                                           lineages, tmp_path, kind):
+    inputs = (phage_nodes, shares_dna, infects, lineages)
+    for df in inputs:  # materialize the cached fixtures before counting
+        df.count()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    res = CLOUD_CALLS[kind](*inputs)
+    sinks.write_vis_html(res.nodes, res.edges, str(tmp_path / "cloud.html"))
+    assert jsc.getPersistentRDDs().size() == before
 
 
 # --- Golden parity (SURVEY.md §5: the reference's only correctness artifacts)

@@ -135,35 +135,3 @@ def test_stream_source_bytes_and_derived_partitions(spark, tmp_path, monkeypatch
     assert derived == const8
     # conf restored after both runs
     assert spark.conf.get("spark.sql.shuffle.partitions") is not None
-
-
-def test_read_table_schema_cache(spark, tmp_path):
-    # round 10: read_table caches INFERRED SCHEMAS keyed on
-    # (path, mtime, size) — metadata only; a changed file re-infers
-    import shutil
-    import os as _os
-
-    from phageclouds_graphdatabase_spark.sources import readers as R
-
-    src = "/root/testdata/sf0.001"
-    d = tmp_path / "sf"
-    d.mkdir()
-    shutil.copy(f"{src}/nation.parquet", d / "nation.parquet")
-    a = R.read_table(spark, str(d), "nation")
-    n_cached = len(R._SCHEMA_CACHE)
-    b = R.read_table(spark, str(d), "nation")
-    assert len(R._SCHEMA_CACHE) == n_cached  # second read hit the cache
-    assert a.schema == b.schema
-    assert a.count() == b.count() == 25
-    # replacing the file invalidates (different size/mtime)
-    shutil.copy(f"{src}/region.parquet", d / "nation.parquet")
-    _os.utime(d / "nation.parquet")
-    c = R.read_table(spark, str(d), "nation")
-    assert [f.name for f in c.schema.fields] != [
-        f.name for f in a.schema.fields
-    ]
-    # events path: ts-unit sniffing still works through the cache
-    ev = R.read_table(spark, src, "events")
-    assert dict(ev.dtypes)["ts"] in ("timestamp", "timestamp_ntz")
-    ev2 = R.read_table(spark, src, "events")
-    assert ev2.schema == ev.schema

@@ -63,6 +63,47 @@ def test_vis_html_sink_roundtrips_through_golden_parser(spark, tmp_path):
     ]
 
 
+def test_read_table_schema_cache(spark, sf_dir, tmp_path):
+    # read_table caches INFERRED SCHEMAS per path, keyed on (mtime, size):
+    # metadata only; a changed file re-infers and replaces its entry
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    shutil.copy(f"{sf_dir}/nation.parquet", d / "nation.parquet")
+    a = readers.read_table(spark, str(d), "nation")
+    n_cached = len(readers._SCHEMA_CACHE)
+    b = readers.read_table(spark, str(d), "nation")
+    assert len(readers._SCHEMA_CACHE) == n_cached  # second read hit the cache
+    assert a.schema == b.schema
+    assert a.count() == b.count() == 25
+    # replacing the file invalidates (different size/mtime) and replaces
+    # the entry rather than adding one per file version
+    shutil.copy(f"{sf_dir}/region.parquet", d / "nation.parquet")
+    os.utime(d / "nation.parquet")
+    c = readers.read_table(spark, str(d), "nation")
+    assert [f.name for f in c.schema.fields] != [
+        f.name for f in a.schema.fields
+    ]
+    assert len(readers._SCHEMA_CACHE) == n_cached
+    # a directory dataset: rewriting a part file in place leaves the
+    # directory's own stat unchanged, so its schema must not be cached
+    part = d / "tbl.parquet" / "part-0.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"x": [1, 2]}), part)
+    assert readers.read_table(spark, str(d), "tbl").columns == ["x"]
+    pq.write_table(pa.table({"y": ["a"], "z": [1.5]}), part)
+    assert readers.read_table(spark, str(d), "tbl").columns == ["y", "z"]
+    # events path: ts-unit sniffing still works through the cache
+    ev = readers.read_table(spark, sf_dir, "events")
+    assert dict(ev.dtypes)["ts"] in ("timestamp", "timestamp_ntz")
+    ev2 = readers.read_table(spark, sf_dir, "events")
+    assert ev2.schema == ev.schema
+
+
 def test_threshold_slug():
     assert sinks.threshold_slug(0.25) == "025"
     assert sinks.threshold_slug(0.1) == "01"
