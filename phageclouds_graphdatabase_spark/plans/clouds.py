@@ -88,8 +88,13 @@ def _cloud(
     and `color_border` are added here, in that order."""
     qual = edges.filter(F.col("distance") <= F.lit(threshold))
     hit = qual.join(G.maybe_broadcast(seeds), qual["src"] == seeds["id"], "left_semi")
-    base = seeds if kind == "family" else hit.select(F.col("src").alias("id"))
-    node_set = base.unionByName(hit.select(F.col("dst").alias("id"))).distinct()
+    # One reference to `hit` per node-set use: the lazy node set is
+    # recomputed by each of its three consumers below.
+    if kind == "family":
+        ids = seeds.unionByName(hit.select(F.col("dst").alias("id")))
+    else:
+        ids = hit.select(F.explode(F.array("src", "dst")).alias("id"))
+    node_set = ids.distinct()
 
     induced = G.induced_subgraph(node_set, qual)
 
