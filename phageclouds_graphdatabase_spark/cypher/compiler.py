@@ -22,6 +22,7 @@ Clause → plan shape:
 
 from __future__ import annotations
 
+import functools
 import re as _re
 
 from contextlib import contextmanager
@@ -510,12 +511,14 @@ class CypherEngine:
         """Fold one node(-edge-node)* chain into the frame with inner joins.
 
         A named path (``p = ...``) binds ``p`` as a path struct
-        ``(nodes array<key>, rels array<string>, hops int)``. Fixed-length
-        chains derive it from the bound node keys; a var-length edge
-        switches the chain to PER-PATH expansion (one row per distinct
-        path under relationship-uniqueness — exact Neo4j cardinality,
-        operators/graph.py var_length_paths) instead of the distinct-pair
-        fast path."""
+        ``(nodes array<key>, rels array<string>, dists array<double>,
+        hops int)``. Fixed-length chains derive it from the bound node
+        keys; a var-length edge switches the whole chain to PER-PATH
+        expansion (``_join_chain_paths``: one row per distinct path under
+        relationship-uniqueness — exact Neo4j cardinality) instead of the
+        distinct-pair ``_join_var_length``; ``shortestPath`` /
+        ``allShortestPaths`` compile through ``_join_shortest_paths``. All
+        three expand through the frontier kernels of operators/graph.py."""
         if pat.shortest is not None:
             if len(pat.edges) != 1 or pat.edges[0].var_length is None:
                 raise CypherCompileError(
@@ -532,17 +535,7 @@ class CypherEngine:
         if pat.path_var is not None and any(
             e.var_length is not None for e in pat.edges
         ):
-            if len(pat.edges) != 1:
-                # multi-edge chain containing var-length hops:
-                # p = (a)-[*1..2]-(m)-[:T]->(b)
-                self._join_chain_paths(frame, pat, params)
-                return
-            first = pat.nodes[0]
-            anchor = self._anchor_node(frame, first, params)
-            self._join_var_length_paths(
-                frame, anchor, pat.edges[0], pat.nodes[1], params,
-                pat.path_var,
-            )
+            self._join_chain_paths(frame, pat, params)
             return
         first = pat.nodes[0]
         anchor = self._anchor_node(frame, first, params)
@@ -633,19 +626,14 @@ class CypherEngine:
         is_last: bool = True,
     ) -> str:
         """Join anchor -[edge]-> node into frame.df; returns the new anchor."""
+        if edge.var_length is not None:
+            return self._join_var_length(frame, anchor, edge, node, params, how)
         if edge.reltype is None:
-            if edge.var_length is not None:
-                return self._join_var_length_untyped(
-                    frame, anchor, edge, node, params, how
-                )
             return self._join_step_anyrel(
                 frame, anchor, edge, node, params, how, is_last=is_last
             )
         rel = self.catalog.rel(edge.reltype)
         _, anchor_label = frame.vars[anchor]
-
-        if edge.var_length is not None:
-            return self._join_var_length(frame, anchor, edge, node, params, how)
 
         # direction: 'out' anchors at src, 'in' at dst, 'both' unions both
         # orientations (the correct-semantics variant for the directed-once
@@ -965,6 +953,82 @@ class CypherEngine:
             label = near_label
         return F.col(anchor)[self.catalog.node(label).key]
 
+    def _hop_bounds(
+        self, edge: A.EdgePat, rel: RelTable | None = None
+    ) -> tuple[int, int]:
+        """The ``lo..hi`` bounds of a var-length edge, checked against the
+        frontier kernels' 1..10 hop range. A typed walk of more than one hop
+        joins each far endpoint back as the next near one, so ``rel`` must
+        connect one label to itself."""
+        lo, hi = edge.var_length
+        if lo < 1:
+            raise CypherCompileError("var-length minimum must be >= 1")
+        if hi < lo or hi > 10:
+            raise CypherCompileError("var-length maximum must be in [min, 10]")
+        if rel is not None and hi > 1 and rel.src_label != rel.dst_label:
+            raise CypherCompileError(
+                "var-length patterns need same-label endpoints"
+            )
+        return lo, hi
+
+    def _rel_step(
+        self,
+        rel: RelTable,
+        edge: A.EdgePat,
+        params: dict,
+        rid: bool = False,
+        dist: bool = False,
+        composite: bool = False,
+    ) -> tuple[DataFrame, str, str]:
+        """The step table a frontier kernel expands over, with its near and
+        far labels: ``rel``'s edges that pass ``edge``'s property filters,
+        oriented by ``edge``'s direction ('both' unions the two
+        orientations) as ``(__last, __next)`` = (near key, far key).
+
+        ``rid`` adds ``__rid``, the canonical unordered-pair id: edges are
+        stored once per pair with no parallel edges (BASELINE.md "edge
+        storage"), so the pair identifies a relationship in either
+        orientation. ``dist`` adds ``__dist``, the ``distance`` column as a
+        double (NULL when the table has none). ``composite`` keys both ends
+        as ``label|key``, the coordinates in which an untyped walk crosses
+        label domains."""
+        src, dst = (rel.src_col, rel.src_label), (rel.dst_col, rel.dst_label)
+        ends = {"out": [(src, dst)], "in": [(dst, src)]}.get(
+            edge.direction, [(src, dst), (dst, src)]
+        )
+        if len(ends) == 2 and not composite and rel.src_label != rel.dst_label:
+            raise CypherCompileError("undirected match needs same-label endpoints")
+        edf = rel.df
+        for name, val in edge.props:
+            edf = edf.filter(F.col(name) == self._scalar(val, params))
+        extra = []
+        if rid:
+            extra.append(F.concat(
+                F.least(rel.src_col, rel.dst_col),
+                F.lit("|"),
+                F.greatest(rel.src_col, rel.dst_col),
+            ).alias("__rid"))
+        if dist:
+            extra.append((
+                F.col("distance").cast("double")
+                if "distance" in edf.columns
+                else F.lit(None).cast("double")
+            ).alias("__dist"))
+
+        def key(end):
+            col, label = end
+            if composite:
+                return F.concat(F.lit(label + "|"), F.col(col).cast("string"))
+            return F.col(col)
+
+        parts = [
+            edf.select(key(n).alias("__last"), key(f).alias("__next"), *extra)
+            for n, f in ends
+        ]
+        step = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        near, far = ends[0]
+        return step, near[1], far[1]
+
     def _join_var_length(
         self,
         frame: _Frame,
@@ -974,9 +1038,13 @@ class CypherEngine:
         params: dict,
         how: str,
     ) -> str:
-        """Variable-length pattern (a)-[:T*lo..hi]->(b): iterative frontier
-        expansion, per-hop distinct (the W6 k-hop/BFS shape,
-        operators/graph.py k_hop).
+        """Variable-length pattern (a)-[:T*lo..hi]->(b): the distinct pairs
+        a walk of lo..hi hops reaches from the frame's distinct anchor keys
+        (operators/graph.py ``_pairs_reach``, a per-hop-distinct frontier
+        in the shape of the W6 k-hop/BFS). Seeding from the anchor keys,
+        with the _fold_match predicate pushdown, makes the frontier
+        anchor-set-sized instead of whole-graph-sized (measured:
+        cypher_var_length_khop 23 s -> ~3 s at sf0.01).
 
         Documented deviation from Neo4j: one row per DISTINCT reachable
         (a, b) pair, not one row per path — path multiplicity explodes
@@ -987,544 +1055,173 @@ class CypherEngine:
         too). Relationship variables on var-length edges are unsupported
         (Neo4j binds a list of relationships there).
 
+        Untyped ``(a)-[*lo..hi]->(b)`` walks the union of EVERY relationship
+        type in composite 'label|key' coordinates, so hops cross label
+        domains (a phage can reach a host via infects on hop 2); its far
+        endpoint binds through the union-of-labels machinery unless the
+        pattern names its label. Relationship property filters prune the
+        types that lack the property (missing property IS null).
+
         For EXACT Neo4j per-path cardinality, bind a named path —
         ``MATCH p = (a)-[:T*lo..hi]-(b)`` compiles through
-        ``_join_var_length_paths`` instead."""
+        ``_join_chain_paths`` instead."""
+        from phageclouds_graphdatabase_spark.operators import graph as _G
+
         if edge.var is not None:
             raise CypherCompileError(
                 "relationship variables on var-length patterns are not "
                 "supported (use an explicit chain to bind each hop)"
             )
-        lo, hi = edge.var_length
-        if lo < 1:
-            raise CypherCompileError("var-length minimum must be >= 1")
-        if hi < lo or hi > 10:
-            raise CypherCompileError("var-length maximum must be in [min, 10]")
-        rel = self.catalog.rel(edge.reltype)
-        if edge.direction == "out":
-            near, far, far_label = rel.src_col, rel.dst_col, rel.dst_label
-            edf = rel.df
-        elif edge.direction == "in":
-            near, far, far_label = rel.dst_col, rel.src_col, rel.src_label
-            edf = rel.df
+        if edge.reltype is None:
+            lo, hi = self._hop_bounds(edge)
+            arms = [
+                self._rel_step(rel, edge, params, composite=True)[0]
+                for rel in self.catalog.rels.values()
+                if all(name in rel.df.columns for name, _ in edge.props)
+            ]
+            step = (
+                functools.reduce(DataFrame.unionByName, arms) if arms
+                else frame.df.sparkSession.createDataFrame(
+                    [], "__last string, __next string"
+                )
+            )
+            albl = frame.vars[anchor][1]
+            anchor_key = (
+                F.col(anchor)["__key"] if albl == _ANY else F.concat(
+                    F.lit(albl + "|"),
+                    F.col(anchor)[self.catalog.node(albl).key].cast("string"),
+                )
+            )
+            nlabel = node.label or _ANY
         else:
-            if rel.src_label != rel.dst_label:
-                raise CypherCompileError(
-                    "undirected match needs same-label endpoints"
-                )
-            flipped = rel.df.withColumnRenamed(rel.src_col, "__swap").withColumnRenamed(
-                rel.dst_col, rel.src_col
-            ).withColumnRenamed("__swap", rel.dst_col)
-            edf = rel.df.unionByName(flipped.select(rel.df.columns))
-            near, far, far_label = rel.src_col, rel.dst_col, rel.dst_label
-        if rel.src_label != rel.dst_label and hi > 1:
-            raise CypherCompileError(
-                "var-length patterns need same-label endpoints"
-            )
-        for name, val in edge.props:
-            edf = edf.filter(F.col(name) == self._scalar(val, params))
-
-        # materialize the step table once (the hop loop re-joins it every
-        # round; a derived edge table would otherwise recompute per hop)
-        # and SEED the expansion from the frame's anchor keys — with the
-        # _fold_match predicate pushdown this makes the frontier
-        # anchor-set-sized instead of whole-graph-sized (measured:
-        # cypher_var_length_khop 23 s -> ~3 s at sf0.01)
-        step = edf.select(
-            F.col(near).alias("__va"), F.col(far).alias("__vb")
-        ).localCheckpoint()
-        near_label = rel.src_label if near == rel.src_col else rel.dst_label
-        anchor_key = self._anchor_expand_key(frame, anchor, near_label)
-        seeds = frame.df.select(anchor_key.alias("__vs")).distinct()
-        frontier = (
-            seeds.join(step, F.col("__vs") == F.col("__va"))
-            .select(F.col("__vs").alias("__va"), "__vb")
-            .distinct()
-        )
-        reached = frontier if lo <= 1 else None
-        for hop in range(2, hi + 1):
-            nxt = step.select(
-                F.col("__va").alias("__vb2"), F.col("__vb").alias("__vc")
-            )
-            frontier = (
-                frontier.join(nxt, F.col("__vb") == F.col("__vb2"))
-                .select("__va", F.col("__vc").alias("__vb"))
-                .distinct()
-            )
-            if hop >= lo:
-                reached = (
-                    frontier if reached is None
-                    else reached.unionByName(frontier).distinct()
-                )
-
-        reached = reached.filter(F.col("__va") != F.col("__vb"))
-        joined = frame.df.join(reached, anchor_key == F.col("__va"), how)
+            rel = self.catalog.rel(edge.reltype)
+            lo, hi = self._hop_bounds(edge, rel)
+            step, near_label, far_label = self._rel_step(rel, edge, params)
+            anchor_key = self._anchor_expand_key(frame, anchor, near_label)
+            nlabel = node.label or far_label
+        seeds = frame.df.select(anchor_key.alias("__src")).distinct()
+        reached = _G._pairs_reach(seeds, step, lo, hi)
+        joined = frame.df.join(reached, anchor_key == F.col("__src"), how)
 
         nvar = node.var or frame.fresh("n")
-        nlabel = node.label or far_label
+        if nlabel == _ANY:
+            self._mark_any_used(frame, nvar)
         nt = self.catalog.node(nlabel)
         ndf = nt.df
         for name, val in node.props:
             ndf = ndf.filter(F.col(name) == self._scalar(val, params))
         nside = ndf.select(_struct_of(ndf, nvar, nt.key, frame))
-        frame.df = joined.join(
-            nside, F.col("__vb") == F.col(nvar)[nt.key], how
-        ).drop("__va", "__vb")
+        nkey = F.col(nvar)[nt.key]
+        if edge.reltype is None and nlabel != _ANY:
+            nkey = F.concat(F.lit(nlabel + "|"), nkey.cast("string"))
+        frame.df = joined.join(nside, F.col("__last") == nkey, how).drop(
+            "__src", "__last"
+        )
         frame.vars[nvar] = ("node", nlabel)
         return nvar
 
-    def _join_var_length_untyped(
-        self,
-        frame: _Frame,
-        anchor: str,
-        edge: A.EdgePat,
-        node: A.NodePat,
-        params: dict,
-        how: str,
-    ) -> str:
-        """Untyped var-length ``(a)-[*lo..hi]->(b)``: the distinct-pairs
-        expansion over the union of EVERY relationship type, in composite
-        'label|key' coordinates so hops cross label domains (a phage can
-        reach a host via infects on hop 2). Same frontier loop and
-        deviation (one row per distinct pair) as the typed form; the far
-        endpoint binds through the union-of-labels machinery unless the
-        pattern names its label. Relationship property filters prune arms
-        whose type lacks the property (missing property IS null)."""
-        if edge.var is not None:
-            raise CypherCompileError(
-                "relationship variables on var-length patterns are not "
-                "supported (use an explicit chain to bind each hop)"
-            )
-        lo, hi = edge.var_length
-        if lo < 1:
-            raise CypherCompileError("var-length minimum must be >= 1")
-        if hi < lo or hi > 10:
-            raise CypherCompileError("var-length maximum must be in [min, 10]")
-        arms = []
-        for _, rel in self.catalog.rels.items():
-            ors = []
-            if edge.direction in ("out", "both"):
-                ors.append((rel.src_col, rel.dst_col, rel.src_label, rel.dst_label))
-            if edge.direction in ("in", "both"):
-                ors.append((rel.dst_col, rel.src_col, rel.dst_label, rel.src_label))
-            for nc, fc, nl, fl in ors:
-                if any(name not in rel.df.columns for name, _ in edge.props):
-                    continue
-                edf = rel.df
-                for name, val in edge.props:
-                    edf = edf.filter(F.col(name) == self._scalar(val, params))
-                arms.append(edf.select(
-                    F.concat(
-                        F.lit(nl + "|"), F.col(nc).cast("string")
-                    ).alias("__va"),
-                    F.concat(
-                        F.lit(fl + "|"), F.col(fc).cast("string")
-                    ).alias("__vb"),
-                ))
-        spark = frame.df.sparkSession
-        if arms:
-            step = arms[0]
-            for a in arms[1:]:
-                step = step.unionByName(a)
-            step = step.localCheckpoint()
-        else:
-            step = spark.createDataFrame([], "__va string, __vb string")
-
-        kind, albl = frame.vars[anchor]
-        if albl == _ANY:
-            anchor_key = F.col(anchor)["__key"]
-        else:
-            anchor_key = F.concat(
-                F.lit(albl + "|"),
-                F.col(anchor)[self.catalog.node(albl).key].cast("string"),
-            )
-        seeds = frame.df.select(anchor_key.alias("__vs")).distinct()
-        frontier = (
-            seeds.join(step, F.col("__vs") == F.col("__va"))
-            .select(F.col("__vs").alias("__va"), "__vb")
-            .distinct()
-        )
-        reached = frontier if lo <= 1 else None
-        for hop in range(2, hi + 1):
-            nxt = step.select(
-                F.col("__va").alias("__vb2"), F.col("__vb").alias("__vc")
-            )
-            frontier = (
-                frontier.join(nxt, F.col("__vb") == F.col("__vb2"))
-                .select("__va", F.col("__vc").alias("__vb"))
-                .distinct()
-            )
-            if hop >= lo:
-                reached = (
-                    frontier if reached is None
-                    else reached.unionByName(frontier).distinct()
-                )
-        reached = reached.filter(F.col("__va") != F.col("__vb"))
-        joined = frame.df.join(reached, anchor_key == F.col("__va"), how)
-
-        nvar = node.var or frame.fresh("n")
-        if node.label is not None:
-            nt = self.catalog.node(node.label)
-            ndf = nt.df
-            for name, val in node.props:
-                ndf = ndf.filter(F.col(name) == self._scalar(val, params))
-            nside = ndf.select(_struct_of(ndf, nvar, nt.key, frame))
-            nkey = F.concat(
-                F.lit(node.label + "|"),
-                F.col(nvar)[nt.key].cast("string"),
-            )
-            frame.df = joined.join(nside, F.col("__vb") == nkey, how).drop(
-                "__va", "__vb"
-            )
-            frame.vars[nvar] = ("node", node.label)
-            return nvar
-        self._mark_any_used(frame, nvar)
-        nt = self.catalog.node(_ANY)
-        ndf = nt.df
-        for name, val in node.props:
-            ndf = ndf.filter(F.col(name) == self._scalar(val, params))
-        nside = ndf.select(_struct_of(ndf, nvar, nt.key, frame))
-        frame.df = joined.join(
-            nside, F.col("__vb") == F.col(nvar)["__key"], how
-        ).drop("__va", "__vb")
-        frame.vars[nvar] = ("node", _ANY)
-        return nvar
-
-    def _join_var_length_paths(
-        self,
-        frame: _Frame,
-        anchor: str,
-        edge: A.EdgePat,
-        node: A.NodePat,
-        params: dict,
-        path_var: str,
-    ) -> str:
-        """PER-PATH var-length expansion for ``MATCH p = (a)-[:T*lo..hi]-(b)``:
-        one row per distinct path under Cypher's relationship-uniqueness rule
-        (openCypher 9 §8.5; node revisits via different relationships allowed)
-        — the exact Neo4j cardinality that the distinct-pair
-        ``_join_var_length`` fast path trades away. Frontier-at-a-time with
-        the path carried as an array column; per-round cost is output-sized
-        (see operators/graph.py var_length_paths, the standalone form).
-
-        Binds ``p`` as ``(nodes, rels, hops)``; ``rels`` holds canonical
-        unordered-pair ids (edge stored once per pair, no parallel edges).
-        """
-        if edge.var is not None:
-            raise CypherCompileError(
-                "relationship variables on var-length patterns are not "
-                "supported (use relationships(p) on the named path)"
-            )
-        if frame.has(path_var):
-            raise CypherCompileError(f"{path_var} is already bound")
-        lo, hi = edge.var_length
-        if lo < 1:
-            raise CypherCompileError("var-length minimum must be >= 1")
-        if hi < lo or hi > 10:
-            raise CypherCompileError("var-length maximum must be in [min, 10]")
-        rel = self.catalog.rel(edge.reltype)
-        if rel.src_label != rel.dst_label:
-            raise CypherCompileError(
-                "var-length patterns need same-label endpoints"
-            )
-        edf = rel.df
-        for name, val in edge.props:
-            edf = edf.filter(F.col(name) == self._scalar(val, params))
-        rid = F.concat(
-            F.least(rel.src_col, rel.dst_col),
-            F.lit("|"),
-            F.greatest(rel.src_col, rel.dst_col),
-        )
-        # per-hop edge weight, carried ONLY when the query reads p.dists
-        # (reduce() path-cost queries) -- the extra array column widens
-        # every frontier shuffle otherwise. NULLs when the relationship
-        # table has no distance column.
+    def _need_dists(self, frame: _Frame, path_var: str | None) -> bool:
+        """Whether the query reads ``path_var``'s per-hop weights (``dists``,
+        reduce() path-cost queries): only then do the path kernels carry
+        them, since the extra array column widens every frontier shuffle."""
+        if path_var is None:
+            return False
         u = frame.used.get(path_var) if frame.used is not None else _ALL
-        need_dists = u is _ALL or (u is not None and "dists" in u)
-        dist = (
-            F.col("distance").cast("double")
-            if "distance" in edf.columns
-            else F.lit(None).cast("double")
-        )
-
-        def _step(near: str, far: str):
-            cols = [
-                F.col(near).alias("__pl"),
-                F.col(far).alias("__pn"),
-                rid.alias("__pr"),
-            ]
-            if need_dists:
-                cols.append(dist.alias("__pd"))
-            return edf.select(*cols)
-
-        if edge.direction == "out":
-            step = _step(rel.src_col, rel.dst_col)
-        elif edge.direction == "in":
-            step = _step(rel.dst_col, rel.src_col)
-        else:
-            step = _step(rel.src_col, rel.dst_col).unionByName(
-                _step(rel.dst_col, rel.src_col)
-            )
-        # materialize once: every hop re-joins the step table, which on a
-        # derived catalog would otherwise recompute its full lineage per
-        # round (cypher_path_enumeration 21 s -> ~8 s at sf0.01)
-        step = step.localCheckpoint()
-
-        anchor_key = self._anchor_expand_key(frame, anchor, rel.src_label)
-        seeds = frame.df.select(anchor_key.alias("__pa")).distinct()
-        first_sel = [
-            F.array("__pa", "__pn").alias("__nodes"),
-            F.array("__pr").alias("__rels"),
-            F.col("__pn").alias("__pl"),
-        ]
-        if need_dists:
-            first_sel.insert(2, F.array("__pd").alias("__dists"))
-        paths = (
-            seeds.join(step, F.col("__pa") == F.col("__pl"))
-            .select(*first_sel)
-            .localCheckpoint()
-        )
-        out = paths if lo <= 1 else None
-        for hop in range(2, hi + 1):
-            ext_sel = [
-                F.concat("__nodes", F.array("__pn")).alias("__nodes"),
-                F.concat("__rels", F.array("__pr")).alias("__rels"),
-                F.col("__pn").alias("__pl"),
-            ]
-            if need_dists:
-                ext_sel.insert(2, F.concat("__dists", F.array("__pd")).alias("__dists"))
-            paths = (
-                paths.join(step, "__pl")
-                .filter(~F.array_contains(F.col("__rels"), F.col("__pr")))
-                .select(*ext_sel)
-                .localCheckpoint()
-            )
-            if paths.isEmpty():
-                break
-            if hop >= lo:
-                out = paths if out is None else out.unionByName(paths)
-        if out is None:
-            out = paths.filter(F.lit(False))  # no path reached lo hops
-        reached = out.select(
-            F.element_at("__nodes", 1).alias("__pa"),
-            F.col("__pl").alias("__pb"),
-            "__nodes",
-            "__rels",
-            *(["__dists"] if need_dists else []),
-        )
-        joined = frame.df.join(reached, anchor_key == F.col("__pa"), "inner")
-
-        if node.var is not None and frame.has(node.var):
-            # Far endpoint already bound (the canonical Neo4j usage
-            # ``MATCH (a {..}), (b {..}) MATCH p = (a)-[*lo..hi]-(b)``):
-            # close onto the existing binding -- re-joining a fresh node
-            # struct under the same name would duplicate the column
-            # (AMBIGUOUS_REFERENCE). Mirrors _join_step's cycle-close.
-            nvar = node.var
-            nlabel = frame.vars[nvar][1]
-            if node.label is not None and node.label != nlabel:
-                raise CypherCompileError(
-                    f"{nvar} is bound to :{nlabel}, not :{node.label}"
-                )
-            bound = joined.filter(
-                F.col("__pb") == F.col(nvar)[self.catalog.node(nlabel).key]
-            )
-            for name, val in node.props:
-                bound = bound.filter(
-                    F.col(nvar)[name] == self._scalar(val, params)
-                )
-        else:
-            nvar = node.var or frame.fresh("n")
-            nlabel = node.label or rel.dst_label
-            nt = self.catalog.node(nlabel)
-            ndf = nt.df
-            for name, val in node.props:
-                ndf = ndf.filter(F.col(name) == self._scalar(val, params))
-            nside = ndf.select(_struct_of(ndf, nvar, nt.key, frame))
-            bound = joined.join(
-                nside, F.col("__pb") == F.col(nvar)[nt.key], "inner"
-            )
-            frame.vars[nvar] = ("node", nlabel)
-        frame.df = (
-            bound.withColumn(
-                path_var,
-                F.struct(
-                    F.col("__nodes").alias("nodes"),
-                    F.col("__rels").alias("rels"),
-                    (
-                        F.col("__dists") if need_dists
-                        else F.lit(None).cast("array<double>")
-                    ).alias("dists"),
-                    F.size("__rels").alias("hops"),
-                ),
-            )
-            .drop("__pa", "__pb", "__nodes", "__rels", "__dists", "__pl")
-        )
-        frame.vars[path_var] = ("path", None)
-        return nvar
+        return u is _ALL or (u is not None and "dists" in u)
 
     def _join_chain_paths(
         self, frame: _Frame, pat: A.PathPat, params: dict
     ) -> None:
-        """Named path over a MULTI-EDGE chain containing var-length hops
-        (``p = (a)-[:T*1..2]-(m)-[:T]->(b)`` — the first composition a
-        Neo4j user writes beyond the reference's single-hop templates,
-        which chain patterns at
-        /root/reference/phageclouds_gdb_family.py:94; VERDICT r1 next #5).
+        """Named path over a chain containing var-length hops, e.g.
+        ``p = (a)-[:T*lo..hi]-(b)`` or ``p = (a)-[:T*1..2]-(m)-[:T]->(b)``
+        (the first composition a Neo4j user writes beyond the reference's
+        single-hop templates, which chain patterns at
+        /root/reference/phageclouds_gdb_family.py:94; VERDICT r1 next #5):
+        one row per distinct path under Cypher's relationship-uniqueness
+        rule (openCypher 9 §8.5; node revisits via different relationships
+        allowed) — the exact Neo4j cardinality that the distinct-pair
+        ``_join_var_length`` trades away.
 
         Folds per-path state through the chain: a narrow state table
         seeded from the DISTINCT anchor keys carries (nodes, rels[, dists],
-        current endpoint) plus one captured key per named chain node. Each
-        fixed hop is one join; each var-length hop a frontier loop — both
-        enforce relationship-uniqueness against the ACCUMULATED rels array,
-        so uniqueness spans the whole pattern (Neo4j's rule, openCypher 9
-        §8.5), not just one segment. Inline node property filters prune the
-        frontier at their chain position (dead paths never expand further);
-        node STRUCTS for named nodes join back after the fold on their
-        captured keys — one join each, off the per-path hot loop.
-        Already-bound node variables (including the anchor, closing a
-        cycle) filter against the existing binding instead of re-joining.
+        current endpoint) plus one captured key per named chain node. Every
+        hop extends it through operators/graph.py ``_extend_paths`` (the
+        kernel of the standalone ``var_length_paths``; a fixed hop is
+        lo = hi = 1), which enforces relationship-uniqueness against the
+        ACCUMULATED rels array, so uniqueness spans the whole pattern, not
+        just one segment. Inline node property filters prune the frontier
+        at their chain position (dead paths never expand further); node
+        STRUCTS for named nodes join back after the fold on their captured
+        keys — one join each, off the per-path hot loop. Already-bound node
+        variables (including the anchor, closing a cycle) filter against
+        the existing binding instead of re-joining. Per-round state is
+        output-sized; the frame's other columns never enter the expansion.
 
-        Scale: per-round state is output-sized (frontier-at-a-time with
-        localCheckpoint per extension, like _join_var_length_paths); the
-        frame's other columns never enter the expansion."""
+        Binds ``p`` as ``(nodes, rels, dists, hops)``; ``rels`` holds the
+        canonical unordered-pair ids (_rel_step). A single-edge chain
+        resolves an any-label anchor (_anchor_expand_key); a longer chain
+        would have to thread the label per position and rejects it."""
+        from phageclouds_graphdatabase_spark.operators import graph as _G
+
         path_var = pat.path_var
         if frame.has(path_var):
             raise CypherCompileError(f"{path_var} is already bound")
-        first = pat.nodes[0]
-        anchor = self._anchor_node(frame, first, params)
-        self._reject_any_anchor(frame, anchor, "multi-edge chain expansion")
-        nt_anchor = self.catalog.node(frame.vars[anchor][1])
-        anchor_key = F.col(anchor)[nt_anchor.key]
+        anchor = self._anchor_node(frame, pat.nodes[0], params)
+        if len(pat.edges) > 1:
+            self._reject_any_anchor(frame, anchor, "multi-edge chain expansion")
+        need_dists = self._need_dists(frame, path_var)
 
-        u = frame.used.get(path_var) if frame.used is not None else _ALL
-        need_dists = u is _ALL or (u is not None and "dists" in u)
-
-        init = [
-            F.col("__pa"),
-            F.array("__pa").alias("__nodes"),
-            F.array().cast("array<string>").alias("__rels"),
-            F.col("__pa").alias("__pl"),
-        ]
-        if need_dists:
-            init.append(F.array().cast("array<double>").alias("__dists"))
-        state = (
-            frame.df.select(anchor_key.alias("__pa")).distinct().select(*init)
-        )
-        carry: list[str] = ["__pa"]
-        captured: list[tuple] = []  # ('bound'|'new', var, key_col, ...)
-        pending_new: dict[str, str] = {}  # named-new var -> captured key col
-
-        cur_label = frame.vars[anchor][1]
-        for edge, node in zip(pat.edges, pat.nodes[1:]):
+        hops = []
+        for edge in pat.edges:
             if edge.var is not None:
                 raise CypherCompileError(
-                    "relationship variables on named multi-hop paths are "
+                    "relationship variables on named var-length paths are "
                     "not supported (use relationships(p))"
                 )
             if edge.reltype is None:
                 raise CypherCompileError("relationship patterns need a type")
             rel = self.catalog.rel(edge.reltype)
-            edf = rel.df
-            for name, val in edge.props:
-                edf = edf.filter(F.col(name) == self._scalar(val, params))
-            rid = F.concat(
-                F.least(rel.src_col, rel.dst_col),
-                F.lit("|"),
-                F.greatest(rel.src_col, rel.dst_col),
+            bounds = (
+                (1, 1) if edge.var_length is None
+                else self._hop_bounds(edge, rel)
             )
-            dist = (
-                F.col("distance").cast("double")
-                if "distance" in edf.columns
-                else F.lit(None).cast("double")
-            )
+            hops.append((edge, bounds, *self._rel_step(
+                rel, edge, params, rid=True, dist=need_dists
+            )))
 
-            def _step(near: str, far: str):
-                cols = [
-                    F.col(near).alias("__sl"),
-                    F.col(far).alias("__pn"),
-                    rid.alias("__pr"),
-                ]
-                if need_dists:
-                    cols.append(dist.alias("__pd"))
-                return edf.select(*cols)
-
-            if edge.direction == "out":
-                if cur_label != rel.src_label:
-                    raise CypherCompileError(
-                        f"cannot follow :{edge.reltype} from a :{cur_label}"
-                    )
-                nxt_label = rel.dst_label
-                step = _step(rel.src_col, rel.dst_col)
-            elif edge.direction == "in":
-                if cur_label != rel.dst_label:
-                    raise CypherCompileError(
-                        f"cannot follow :{edge.reltype} into a :{cur_label}"
-                    )
-                nxt_label = rel.src_label
-                step = _step(rel.dst_col, rel.src_col)
-            else:
-                if rel.src_label != rel.dst_label:
-                    raise CypherCompileError(
-                        "undirected match needs same-label endpoints"
-                    )
-                nxt_label = rel.dst_label
-                step = _step(rel.src_col, rel.dst_col).unionByName(
-                    _step(rel.dst_col, rel.src_col)
+        cur_label = frame.vars[anchor][1]
+        anchor_key = self._anchor_expand_key(frame, anchor, hops[0][3])
+        if cur_label == _ANY:
+            cur_label = hops[0][3]
+        init = [
+            F.col("__pa"),
+            F.array("__pa").alias("__nodes"),
+            F.array().cast("array<string>").alias("__rels"),
+            F.col("__pa").alias("__last"),
+        ]
+        if need_dists:
+            init.append(F.array().cast("array<double>").alias("__dists"))
+        state = frame.df.select(anchor_key.alias("__pa")).distinct().select(*init)
+        captured: list[tuple] = []  # ('bound'|'new', var, key_col, ...)
+        pending_new: dict[str, str] = {}  # named-new var -> captured key col
+        for (edge, (lo, hi), step, near_label, far_label), node in zip(
+            hops, pat.nodes[1:]
+        ):
+            if edge.direction != "both" and cur_label != near_label:
+                raise CypherCompileError(
+                    f"cannot follow :{edge.reltype} from a :{cur_label}"
                 )
-            step = step.localCheckpoint()
-
-            ext_sel = [
-                *carry,
-                F.concat("__nodes", F.array("__pn")).alias("__nodes"),
-                F.concat("__rels", F.array("__pr")).alias("__rels"),
-                F.col("__pn").alias("__pl"),
-            ]
-            if need_dists:
-                ext_sel.append(
-                    F.concat("__dists", F.array("__pd")).alias("__dists")
-                )
-
-            def _extend(s, step=step, ext_sel=ext_sel):
-                return (
-                    s.join(step, s["__pl"] == step["__sl"])
-                    .filter(~F.array_contains(F.col("__rels"), F.col("__pr")))
-                    .select(*ext_sel)
-                    .localCheckpoint()
-                )
-
-            if edge.var_length is None:
-                state = _extend(state)
-            else:
-                lo, hi = edge.var_length
-                if lo < 1:
-                    raise CypherCompileError(
-                        "var-length minimum must be >= 1"
-                    )
-                if hi < lo or hi > 10:
-                    raise CypherCompileError(
-                        "var-length maximum must be in [min, 10]"
-                    )
-                out = None
-                for hop in range(1, hi + 1):
-                    state = _extend(state)
-                    if state.isEmpty():
-                        break
-                    if hop >= lo:
-                        out = (
-                            state if out is None else out.unionByName(state)
-                        )
-                state = out if out is not None else state.filter(F.lit(False))
-            cur_label = nxt_label
+            state = _G._extend_paths(state, step, lo, hi)
+            cur_label = far_label
 
             nvar = node.var
             if nvar == anchor:
                 # cycle back onto the anchor: its key IS __pa
-                state = state.filter(F.col("__pl") == F.col("__pa"))
+                state = state.filter(F.col("__last") == F.col("__pa"))
             elif nvar is not None and nvar in pending_new:
                 # revisiting a named chain node bound earlier in THIS chain
                 state = state.filter(
-                    F.col("__pl") == F.col(pending_new[nvar])
+                    F.col("__last") == F.col(pending_new[nvar])
                 )
             elif nvar is not None and frame.has(nvar):
                 kind, blabel = frame.vars[nvar]
@@ -1535,8 +1232,7 @@ class CypherEngine:
                         f"{nvar} is bound to :{blabel}, not :{node.label}"
                     )
                 kc = frame.fresh("k")
-                state = state.withColumn(kc, F.col("__pl"))
-                carry = carry + [kc]
+                state = state.withColumn(kc, F.col("__last"))
                 captured.append(("bound", nvar, kc, node.props))
             else:
                 nlabel = node.label or cur_label
@@ -1549,13 +1245,12 @@ class CypherEngine:
                     # must not expand through the rest of the chain
                     state = state.join(
                         ndf.select(F.col(nt.key).alias("__nk")),
-                        F.col("__pl") == F.col("__nk"),
+                        F.col("__last") == F.col("__nk"),
                         "left_semi",
                     )
                 if nvar is not None:
                     kc = frame.fresh("k")
-                    state = state.withColumn(kc, F.col("__pl"))
-                    carry = carry + [kc]
+                    state = state.withColumn(kc, F.col("__last"))
                     captured.append(("new", nvar, kc, nlabel, ndf))
                     pending_new[nvar] = kc
 
@@ -1592,7 +1287,7 @@ class CypherEngine:
                 F.size("__rels").alias("hops"),
             ),
         ).drop(
-            "__pa", "__nodes", "__rels", "__dists", "__pl",
+            "__pa", "__nodes", "__rels", "__dists", "__last",
             *[c[2] for c in captured],
         )
         frame.vars[path_var] = ("path", None)
@@ -1607,15 +1302,17 @@ class CypherEngine:
         path_var: str | None,
         mode: str,
     ) -> str:
-        """``shortestPath((a)-[:T*..k]-(b))`` / ``allShortestPaths``:
-        level-synchronous BFS carrying paths, an anti-join against the
-        visited (seed, node) pair set per level (operators/graph.py
-        shortest_paths is the standalone form). ``mode='one'`` reduces to
-        the lexicographically-smallest path per pair — Neo4j returns an
-        arbitrary one; a distributed engine must pick deterministically
-        (documented deviation). The far node's label/property filters apply
-        AFTER the BFS, per Neo4j (the path search doesn't thread endpoint
-        predicates)."""
+        """``shortestPath((a)-[:T*..k]-(b))`` / ``allShortestPaths``: the
+        level-synchronous BFS of operators/graph.py ``_shortest_frontier``
+        (the kernel of the standalone ``shortest_paths``) from the frame's
+        distinct anchor keys. ``mode='one'`` reduces to the
+        lexicographically-smallest path per pair (``_lexmin_path``) — Neo4j
+        returns an arbitrary one; a distributed engine must pick
+        deterministically (documented deviation). The far node's
+        label/property filters apply AFTER the BFS, per Neo4j (the path
+        search doesn't thread endpoint predicates)."""
+        from phageclouds_graphdatabase_spark.operators import graph as _G
+
         if edge.var is not None:
             raise CypherCompileError(
                 "relationship variables on shortestPath are not supported "
@@ -1623,115 +1320,22 @@ class CypherEngine:
             )
         if path_var is not None and frame.has(path_var):
             raise CypherCompileError(f"{path_var} is already bound")
-        lo, hi = edge.var_length
+        rel = self.catalog.rel(edge.reltype)
+        lo, hi = self._hop_bounds(edge, rel)
         if lo != 1:
             raise CypherCompileError(
                 "shortestPath supports a minimum of exactly 1 hop"
             )
-        if hi < 1 or hi > 10:
-            raise CypherCompileError("shortestPath maximum must be in [1, 10]")
-        rel = self.catalog.rel(edge.reltype)
-        if rel.src_label != rel.dst_label:
-            raise CypherCompileError(
-                "var-length patterns need same-label endpoints"
-            )
-        edf = rel.df
-        for name, val in edge.props:
-            edf = edf.filter(F.col(name) == self._scalar(val, params))
-        u = (
-            frame.used.get(path_var)
-            if (frame.used is not None and path_var is not None)
-            else None
+        need_dists = self._need_dists(frame, path_var)
+        step, near_label, far_label = self._rel_step(
+            rel, edge, params, dist=need_dists
         )
-        need_dists = u is _ALL or (u is not None and "dists" in u)
-        dist = (
-            F.col("distance").cast("double")
-            if "distance" in edf.columns
-            else F.lit(None).cast("double")
-        )
-
-        def _step(near: str, far: str):
-            cols = [F.col(near).alias("__pl"), F.col(far).alias("__pn")]
-            if need_dists:
-                cols.append(dist.alias("__pd"))
-            return edf.select(*cols)
-
-        if edge.direction == "out":
-            step = _step(rel.src_col, rel.dst_col)
-        elif edge.direction == "in":
-            step = _step(rel.dst_col, rel.src_col)
-        else:
-            step = _step(rel.src_col, rel.dst_col).unionByName(
-                _step(rel.dst_col, rel.src_col)
-            )
-        step = step.localCheckpoint()  # see _join_var_length_paths note
-
-        anchor_key = self._anchor_expand_key(frame, anchor, rel.src_label)
-        sd = frame.df.select(anchor_key.alias("__pa")).distinct()
-        visited = sd.select(
-            F.col("__pa"), F.col("__pa").alias("__pv")
-        ).localCheckpoint()
-        first_sel = [
-            "__pa",
-            F.array("__pa", "__pn").alias("__nodes"),
-            F.col("__pn").alias("__pl"),
-        ]
-        if need_dists:
-            first_sel.insert(2, F.array("__pd").alias("__dists"))
-        frontier = (
-            sd.join(step, F.col("__pa") == F.col("__pl"))
-            .select(*first_sel)
-            .filter(F.col("__pa") != F.col("__pl"))
-            .localCheckpoint()
-        )
-        out = frontier
-        for _hop in range(2, hi + 1):
-            visited = visited.unionByName(
-                frontier.select("__pa", F.col("__pl").alias("__pv")).distinct()
-            ).localCheckpoint()
-            ext_sel = [
-                "__pa",
-                F.concat("__nodes", F.array("__pn")).alias("__nodes"),
-                F.col("__pn").alias("__pl"),
-            ]
-            if need_dists:
-                ext_sel.insert(
-                    2, F.concat("__dists", F.array("__pd")).alias("__dists")
-                )
-            ext = frontier.join(step, "__pl").select(*ext_sel)
-            frontier = ext.join(
-                visited,
-                (ext["__pa"] == visited["__pa"])
-                & (ext["__pl"] == visited["__pv"]),
-                "left_anti",
-            ).localCheckpoint()
-            if frontier.isEmpty():
-                break
-            out = out.unionByName(frontier)
-        reached = out.select(
-            "__pa", F.col("__pl").alias("__pb"), "__nodes",
-            *(["__dists"] if need_dists else []),
-        )
+        anchor_key = self._anchor_expand_key(frame, anchor, near_label)
+        seeds = frame.df.select(anchor_key.alias("__src")).distinct()
+        reached = _G._shortest_frontier(seeds, step, hi)
         if mode == "one":
-            if need_dists:
-                # min over (nodes, dists) pairs = min over nodes (dists is
-                # a function of the node sequence -- one stored edge per
-                # pair)
-                reached = (
-                    reached.groupBy("__pa", "__pb")
-                    .agg(F.min(F.struct("__nodes", "__dists")).alias("__m"))
-                    .select(
-                        "__pa", "__pb",
-                        F.col("__m.__nodes").alias("__nodes"),
-                        F.col("__m.__dists").alias("__dists"),
-                    )
-                )
-            else:
-                reached = (
-                    reached.groupBy("__pa", "__pb")
-                    .agg(F.min("__nodes").alias("__nodes"))
-                )
-        joined = frame.df.join(reached, anchor_key == F.col("__pa"), "inner")
+            reached = _G._lexmin_path(reached)
+        joined = frame.df.join(reached, anchor_key == F.col("__src"), "inner")
 
         if node.var is not None and frame.has(node.var):
             # Far endpoint already bound (``MATCH (a {..}), (b {..})
@@ -1747,7 +1351,7 @@ class CypherEngine:
                     f"{nvar} is bound to :{nlabel}, not :{node.label}"
                 )
             frame.df = joined.filter(
-                F.col("__pb") == F.col(nvar)[self.catalog.node(nlabel).key]
+                F.col("__last") == F.col(nvar)[self.catalog.node(nlabel).key]
             )
             for name, val in node.props:
                 frame.df = frame.df.filter(
@@ -1755,14 +1359,14 @@ class CypherEngine:
                 )
         else:
             nvar = node.var or frame.fresh("n")
-            nlabel = node.label or rel.dst_label
+            nlabel = node.label or far_label
             nt = self.catalog.node(nlabel)
             ndf = nt.df
             for name, val in node.props:
                 ndf = ndf.filter(F.col(name) == self._scalar(val, params))
             nside = ndf.select(_struct_of(ndf, nvar, nt.key, frame))
             frame.df = joined.join(
-                nside, F.col("__pb") == F.col(nvar)[nt.key], "inner"
+                nside, F.col("__last") == F.col(nvar)[nt.key], "inner"
             )
             frame.vars[nvar] = ("node", nlabel)
         if path_var is not None:
@@ -1786,7 +1390,7 @@ class CypherEngine:
                 ),
             )
             frame.vars[path_var] = ("path", None)
-        frame.df = frame.df.drop("__pa", "__pb", "__nodes", "__dists", "__pl")
+        frame.df = frame.df.drop("__src", "__last", "__nodes", "__dists")
         return nvar
 
     # -- CALL { } subqueries -------------------------------------------------

@@ -14,13 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def as_node_set(df: DataFrame, col: str) -> DataFrame:
@@ -3899,6 +3893,165 @@ def k_truss(
         live = kept.select("u", "v", "dv")
 
 
+def _pairs_reach(
+    seeds: DataFrame, step: DataFrame, lo: int, hi: int
+) -> DataFrame:
+    """Distinct ``(__src, __last)`` pairs joined by a WALK of ``lo..hi``
+    steps, self-pairs dropped: the distinct-pair var-length expansion of
+    the Cypher frontend. ``seeds`` holds distinct ``__src`` keys, ``step``
+    the oriented edges ``(__last, __next)``.
+
+    The step table is pinned once (every hop re-joins it). The frontier is
+    made distinct per hop, so a round costs distinct pairs x degree, never
+    walk count. Rounds unroll lazily up to ``BFS_LAZY_K``; deeper walks
+    cut each round (_ckpt) and stop once the frontier empties."""
+    step = step.localCheckpoint().withColumnRenamed("__last", "__via")
+    lazy = hi <= BFS_LAZY_K
+    frontier, key = seeds, "__src"
+    reached = None
+    for hop in range(1, hi + 1):
+        frontier = (
+            frontier.join(step, F.col(key) == F.col("__via"))
+            .select("__src", F.col("__next").alias("__last"))
+            .distinct()
+        )
+        key = "__last"
+        if not lazy:
+            frontier = _ckpt(frontier)
+            if frontier.isEmpty():
+                break
+        if hop >= lo:
+            reached = (
+                frontier if reached is None
+                else reached.unionByName(frontier).distinct()
+            )
+    if reached is None:  # the walk died out before lo hops
+        reached = frontier
+    return reached.filter(F.col("__src") != F.col("__last"))
+
+
+def _extend_paths(
+    state: DataFrame, step: DataFrame, lo: int, hi: int
+) -> DataFrame:
+    """Extend every path of ``state`` by ``lo..hi`` more steps under
+    Cypher's relationship-uniqueness rule (a relationship appears at most
+    once per path; node revisits via different relationships are allowed
+    -- openCypher 9 §8.5). Returns the union of the extensions of each
+    length in ``lo..hi``.
+
+    ``state`` carries the node sequence ``__nodes``, the relationship ids
+    ``__rels``, optionally the per-hop weights ``__dists``, the endpoint
+    ``__last``, and any other columns, which ride along unchanged.
+    ``step`` is ``(__last, __next, __rid[, __dist])``; ``__rid`` identifies
+    a relationship (and must be the same in both orientations of an
+    undirected walk). Uniqueness is an ``array_contains`` over the
+    accumulated ``__rels``, so it spans every extension of one path.
+
+    Output-sized by construction: each round joins only the current path
+    frontier against the pinned step table. Rounds unroll lazily up to
+    ``BFS_LAZY_K``; deeper expansions cut each round (_ckpt) and stop once
+    no path extends."""
+    step = step.localCheckpoint()
+    own = ("__nodes", "__rels", "__dists", "__last")
+    ext = [c for c in state.columns if c not in own] + [
+        F.concat("__nodes", F.array("__next")).alias("__nodes"),
+        F.concat("__rels", F.array("__rid")).alias("__rels"),
+        F.col("__next").alias("__last"),
+    ]
+    if "__dists" in state.columns:
+        ext.append(F.concat("__dists", F.array("__dist")).alias("__dists"))
+    lazy = hi <= BFS_LAZY_K
+    out = None
+    for hop in range(1, hi + 1):
+        state = (
+            state.join(step, "__last")
+            .filter(~F.array_contains(F.col("__rels"), F.col("__rid")))
+            .select(*ext)
+        )
+        if not lazy:
+            state = _ckpt(state)
+            if state.isEmpty():
+                break
+        if hop >= lo:
+            out = state if out is None else out.unionByName(state)
+    return state if out is None else out  # None: no path reached lo hops
+
+
+def _shortest_frontier(seeds: DataFrame, step: DataFrame, hi: int) -> DataFrame:
+    """Every shortest path of ``1..hi`` steps from each seed to each node it
+    reaches, as ``(__src, __nodes, __last[, __dists])``; ``__last != __src``.
+    ``seeds`` holds distinct ``__src`` keys, ``step`` the oriented edges
+    ``(__last, __next[, __dist])``; ``__dists`` is carried when the step
+    has a weight.
+
+    Level-synchronous BFS carrying paths: per round only FRONTIER paths
+    (those whose (seed, endpoint) pair was first reached this level) are
+    extended, and an anti-join against the visited pair set drops
+    non-shortest extensions, so state is bounded by the shortest-path
+    count, not the walk count (the prefix property makes extending only
+    shortest prefixes exact). Shortest paths are simple, so Cypher's
+    relationship uniqueness holds for free. Rounds unroll lazily up to
+    ``BFS_LAZY_K``; deeper searches cut each round (_ckpt) and stop once
+    the frontier empties."""
+    step = step.localCheckpoint()
+    lazy = hi <= BFS_LAZY_K
+    first = [
+        "__src",
+        F.array("__src", "__next").alias("__nodes"),
+        F.col("__next").alias("__last"),
+    ]
+    ext = [
+        "__src",
+        F.concat("__nodes", F.array("__next")).alias("__nodes"),
+        F.col("__next").alias("__last"),
+    ]
+    if "__dist" in step.columns:
+        first.append(F.array("__dist").alias("__dists"))
+        ext.append(F.concat("__dists", F.array("__dist")).alias("__dists"))
+    # visited (seed, node) pairs; seeds start visited (no hop-0 pairs)
+    visited = seeds.select("__src", F.col("__src").alias("__last"))
+    # hop-1 pairs are new by construction; only self-loops need dropping
+    frontier = (
+        visited.join(step, "__last")
+        .select(*first)
+        .filter(F.col("__src") != F.col("__last"))
+    )
+    if not lazy:
+        visited, frontier = _ckpt(visited), _ckpt(frontier)
+    out = frontier
+    for _hop in range(2, hi + 1):
+        visited = visited.unionByName(
+            frontier.select("__src", "__last").distinct()
+        )
+        if not lazy:
+            visited = _ckpt(visited)
+        frontier = (
+            frontier.join(step, "__last")
+            .select(*ext)
+            .join(visited, ["__src", "__last"], "left_anti")
+        )
+        if not lazy:
+            frontier = _ckpt(frontier)
+            if frontier.isEmpty():
+                break
+        out = out.unionByName(frontier)
+    return out
+
+
+def _lexmin_path(paths: DataFrame) -> DataFrame:
+    """One path per ``(__src, __last)`` pair: the lexicographically
+    smallest ``__nodes`` (array min orders identically in Spark and DuckDB,
+    so the pick stays oracle-checkable). Neo4j's ``shortestPath`` returns
+    an arbitrary one; a distributed engine must pick deterministically.
+    The other columns follow their path."""
+    rest = [c for c in paths.columns if c not in ("__src", "__nodes", "__last")]
+    return (
+        paths.groupBy("__src", "__last")
+        .agg(F.min(F.struct("__nodes", *rest)).alias("__m"))
+        .select("__src", "__last", "__m.*")
+    )
+
+
 def var_length_paths(
     seeds: DataFrame,
     edges: DataFrame,
@@ -3929,15 +4082,12 @@ def var_length_paths(
     reuse the same stored edge backwards. (A multigraph would need a
     surrogate edge id; out of scope for this data model.)
 
-    Scale: output-sized by construction -- each round joins the CURRENT
-    path frontier against the edge table on its last node, so per-round
-    shuffle = frontier size x avg out-degree, and rounds checkpoint (_ckpt) to
-    keep lineage flat. Path count grows combinatorially on dense graphs;
-    that is inherent to per-path semantics (Neo4j explodes identically) --
-    callers who only need reachability should use ``k_hop``. The
-    ``array_contains`` uniqueness filter runs on arrays of length <= hi
-    (tiny, whole-stage-codegen'd); hop cap 10 mirrors the Cypher frontend
-    bound."""
+    Scale: the expansion is ``_extend_paths``, the kernel the Cypher
+    frontend's named var-length paths share. Per-round shuffle = frontier
+    size x avg out-degree. Path count grows combinatorially on dense
+    graphs; that is inherent to per-path semantics (Neo4j explodes
+    identically) -- callers who only need reachability should use
+    ``k_hop``. Hop cap 10 mirrors the Cypher frontend bound."""
     if lo < 1 or hi < lo or hi > 10:
         raise ValueError("need 1 <= lo <= hi <= 10")
     e = edges if threshold is None else edges.filter(
@@ -3945,68 +4095,26 @@ def var_length_paths(
     )
     rid = F.concat(
         F.least("src", "dst"), F.lit("|"), F.greatest("src", "dst")
-    ).alias("rid")
-    e = e.select("src", "dst", rid)
+    ).alias("__rid")
+    step = e.select(F.col("src").alias("__last"), F.col("dst").alias("__next"), rid)
     if not directed:
-        e = e.unionByName(
-            e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "rid"
-            )
+        step = step.unionByName(
+            e.select(F.col("dst").alias("__last"), F.col("src").alias("__next"), rid)
         )
-    # materialized once: the hop loop re-joins the step table every round
-    # (a derived edge input would otherwise recompute per hop)
-    step = e.select(
-        F.col("src").alias("_last"),
-        F.col("dst").alias("_next"),
-        F.col("rid").alias("_rid"),
-    ).localCheckpoint()
-    frontier = (
-        seeds.select("id")
+    state = (
+        seeds.select(F.col("id").alias("__last"))
         .distinct()
-        .join(step, F.col("id") == F.col("_last"))
         .select(
-            F.array("id", "_next").alias("path"),
-            F.array("_rid").alias("rels"),
-            F.col("_next").alias("_last"),
+            F.array("__last").alias("__nodes"),
+            F.array().cast("array<string>").alias("__rels"),
+            "__last",
         )
-        .localCheckpoint()
     )
-    # Round 9: lazy small-hi unroll (shared BFS_LAZY_K gate) — measured
-    # on graph_path_enumeration; the doubly-consumed per-hop frontier
-    # (next hop + the output union) is cheap to recompute at small hi
-    lazy = hi <= BFS_LAZY_K
-    out = frontier if lo <= 1 else None
-    for _hop in range(2, hi + 1):
-        frontier = (
-            frontier.join(step, "_last")
-            .filter(~F.array_contains(F.col("rels"), F.col("_rid")))
-            .select(
-                F.concat("path", F.array("_next")).alias("path"),
-                F.concat("rels", F.array("_rid")).alias("rels"),
-                F.col("_next").alias("_last"),
-            )
-        )
-        if not lazy:
-            frontier = _ckpt(frontier)
-            if frontier.isEmpty():
-                break
-        if _hop >= lo:
-            out = frontier if out is None else out.unionByName(frontier)
-    if out is None:
-        schema = StructType(
-            [
-                StructField("src", StringType()),
-                StructField("dst", StringType()),
-                StructField("path", ArrayType(StringType())),
-                StructField("hops", IntegerType()),
-            ]
-        )
-        return seeds.sparkSession.createDataFrame([], schema)
-    return out.select(
-        F.element_at("path", 1).alias("src"),
-        F.col("_last").alias("dst"),
-        "path",
-        (F.size("path") - F.lit(1)).alias("hops"),
+    return _extend_paths(state, step, lo, hi).select(
+        F.element_at("__nodes", 1).alias("src"),
+        F.col("__last").alias("dst"),
+        F.col("__nodes").alias("path"),
+        (F.size("__nodes") - F.lit(1)).alias("hops"),
     )
 
 
@@ -4024,22 +4132,15 @@ def shortest_paths(
     var-length expand doesn't cover).
 
     ``mode='all'``: every shortest path per reachable (seed, node) pair
-    (allShortestPaths). ``mode='one'``: exactly one path per pair — Neo4j
-    picks an arbitrary one; a distributed engine must be deterministic, so
-    this picks the lexicographically smallest node sequence (array min,
-    identical ordering in Spark and DuckDB, so it stays oracle-checkable).
+    (allShortestPaths). ``mode='one'``: exactly one path per pair, the
+    lexicographically smallest node sequence (``_lexmin_path``).
 
     Output: ``(src, dst, path array<string>, hops int)``; ``dst != src``
-    (no zero-length paths). Shortest paths are simple (BFS levels can't
-    revisit), so Cypher's relationship-uniqueness holds for free.
+    (no zero-length paths).
 
-    Scale: level-synchronous BFS carrying paths — per round, only FRONTIER
-    paths (those whose (seed, endpoint) pair was first reached this level)
-    are extended, and an anti-join against the visited pair set drops
-    non-shortest extensions, so state is bounded by shortest-path count,
-    not all-walk count (the prefix property makes extending only shortest
-    prefixes exact). Rounds checkpoint (_ckpt) to keep lineage flat; early
-    exit on an empty frontier."""
+    Scale: the search is ``_shortest_frontier``, the level-synchronous BFS
+    the Cypher frontend's ``shortestPath`` shares: state is bounded by the
+    shortest-path count, not the walk count."""
     if mode not in ("all", "one"):
         raise ValueError("mode must be 'all' or 'one'")
     if max_hops < 1 or max_hops > 10:
@@ -4047,77 +4148,22 @@ def shortest_paths(
     e = edges if threshold is None else edges.filter(
         F.col("distance") <= F.lit(threshold)
     )
-    step = e.select(F.col("src").alias("_last"), F.col("dst").alias("_next"))
+    step = e.select(F.col("src").alias("__last"), F.col("dst").alias("__next"))
     if not directed:
         step = step.unionByName(
-            e.select(F.col("dst").alias("_last"), F.col("src").alias("_next"))
+            e.select(F.col("dst").alias("__last"), F.col("src").alias("__next"))
         )
-    step = step.localCheckpoint()  # re-joined every level
-    # Round 9: lazy small-k unroll (shared BFS_LAZY_K gate, same
-    # rationale and A/B discipline as k_hop / multi_source_bfs_levels)
-    lazy = max_hops <= BFS_LAZY_K
-    sd = seeds.select("id").distinct()
-    # visited (seed, node) pairs; seeds start visited (excludes hop-0 pairs)
-    visited = sd.select(
-        F.col("id").alias("_src"), F.col("id").alias("_node")
-    )
-    if not lazy:
-        visited = visited.localCheckpoint()
-    frontier = (
-        sd.join(step, F.col("id") == F.col("_last"))
-        .select(
-            F.col("id").alias("_src"),
-            F.array("id", "_next").alias("_path"),
-            F.col("_next").alias("_last"),
-        )
-        # hop-1 pairs are new by construction (visited = seed self-pairs);
-        # only self-loops need dropping
-        .filter(F.col("_src") != F.col("_last"))
-    )
-    if not lazy:
-        frontier = frontier.localCheckpoint()
-    out = frontier
-    for _hop in range(2, max_hops + 1):
-        visited = visited.unionByName(
-            frontier.select("_src", F.col("_last").alias("_node")).distinct()
-        )
-        if not lazy:
-            visited = _ckpt(visited)
-        ext = (
-            frontier.join(step, "_last")
-            .select(
-                "_src",
-                F.concat("_path", F.array("_next")).alias("_path"),
-                F.col("_next").alias("_last"),
-            )
-        )
-        frontier = ext.join(
-            visited,
-            (ext["_src"] == visited["_src"])
-            & (ext["_last"] == visited["_node"]),
-            "left_anti",
-        )
-        if not lazy:
-            frontier = _ckpt(frontier)
-            if frontier.isEmpty():
-                break
-        out = out.unionByName(frontier)
-    res = out.select(
-        F.col("_src").alias("src"),
-        F.col("_last").alias("dst"),
-        F.col("_path").alias("path"),
-        (F.size("_path") - F.lit(1)).alias("hops"),
+    paths = _shortest_frontier(
+        seeds.select(F.col("id").alias("__src")).distinct(), step, max_hops
     )
     if mode == "one":
-        res = (
-            res.groupBy("src", "dst")
-            .agg(F.min("path").alias("path"))
-            .select(
-                "src", "dst", "path",
-                (F.size("path") - F.lit(1)).alias("hops"),
-            )
-        )
-    return res
+        paths = _lexmin_path(paths)
+    return paths.select(
+        F.col("__src").alias("src"),
+        F.col("__last").alias("dst"),
+        F.col("__nodes").alias("path"),
+        (F.size("__nodes") - F.lit(1)).alias("hops"),
+    )
 
 
 def cheapest_path_costs(

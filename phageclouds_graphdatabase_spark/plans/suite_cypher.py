@@ -242,7 +242,8 @@ def cypher_var_length_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variable-length undirected pattern [:sharesDNA*1..2] — the Cypher
     syntax for the W6 k-hop/BFS expand; distinct (a, b) pairs, self-pairs
     excluded (deviation from Neo4j's per-path rows documented on
-    cypher/compiler.py _join_var_length)."""
+    cypher/compiler.py _join_var_length; the walk is operators/graph.py
+    _pairs_reach)."""
     q = """MATCH (a:PhageGenome)-[:sharesDNA*1..2]-(b:PhageGenome)
             WHERE a.accession IN {}
             RETURN a.accession AS a, b.accession AS b;""".format(_KHOP_SEEDS)
@@ -270,9 +271,11 @@ def cypher_path_enumeration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named path with PER-PATH var-length semantics — exact Neo4j
     cardinality for ``MATCH p = (a)-[:sharesDNA*2..3]-(b) RETURN p``:
     one row per distinct path under relationship-uniqueness (closes the
-    distinct-pair deviation documented on _join_var_length). Runs over the
-    thresholded subgraph (the materialize-then-query usage; the full
-    derived graph's path count is combinatorial)."""
+    distinct-pair deviation documented on cypher/compiler.py
+    _join_var_length; the paths extend through operators/graph.py
+    _extend_paths, as in ``var_length_paths``). Runs over the thresholded
+    subgraph (the materialize-then-query usage; the full derived graph's
+    path count is combinatorial)."""
     eng = CypherEngine(
         phage_catalog(
             _nodes(spark, sf_dir),

@@ -804,35 +804,41 @@ def run_available_now(stream_df: DataFrame, output_mode: str = "append") -> list
 
     spark = stream_df.sparkSession
     name = "s" + uuid.uuid4().hex[:12]
-    with _STREAM_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-        if parts is None:
-            target = int(
-                os.environ.get(
-                    "SPARK_GRAFT_STREAM_STATE_TARGET_BYTES", str(32 << 20)
+    q = None
+    try:
+        with _STREAM_CONF_LOCK:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
+            if parts is None:
+                target = int(
+                    os.environ.get(
+                        "SPARK_GRAFT_STREAM_STATE_TARGET_BYTES", str(32 << 20)
+                    )
                 )
-            )
-            vol = _stream_source_bytes(stream_df)
-            if vol is None:
-                parts = "8"
-            else:
-                parts = str(max(1, min(int(prev), vol // target + 1)))
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    rows = spark.table(name).collect()
-    q.stop()
-    return rows
+                vol = _stream_source_bytes(stream_df)
+                if vol is None:
+                    parts = "8"
+                else:
+                    parts = str(max(1, min(int(prev), vol // target + 1)))
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            try:
+                q = (
+                    stream_df.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode(output_mode)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+        return spark.table(name).collect()
+    finally:
+        # the memory sink registers its rows as a temp view: drop it, so
+        # a run leaves no state behind in the session
+        if q is not None:
+            q.stop()
+        spark.catalog.dropTempView(name)
 
 
 def purchase_click_pairs_left(purchases: DataFrame, clicks: DataFrame) -> DataFrame:

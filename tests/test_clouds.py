@@ -9,8 +9,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from phageclouds_graphdatabase_spark import schemas
 from phageclouds_graphdatabase_spark.plans import clouds
 from phageclouds_graphdatabase_spark.sources import golden, sinks
+
+from conftest import EDGE_ROWS, INFECTS_ROWS, NODE_ROWS
 
 GOLDEN = "/root/reference/Tequatrovirus_025_clouds.html"
 
@@ -68,27 +71,37 @@ def test_host_seeds_are_existential_semi_join(spark, phage_nodes, shares_dna, in
     assert node_ids(res2.nodes) == {"A1", "A2", "A3", "B1", "B2"}
 
 
-def test_host_harsh_filters_seed_side_only(spark, phage_nodes, shares_dna, infects):
-    # Add a GTDB seed phage: G1 infects Escherichia, G1 -> B3 edge. Harsh
-    # drops G1 as a SEED, but GTDB node B3 still enters as a TARGET of
-    # B3->B2?? -- no: B3 enters only if some kept seed points at it. Build
-    # that: B1 -> B3 would be needed; instead assert G1 gone entirely.
-    nodes2 = phage_nodes.unionByName(
-        spark.createDataFrame(
-            [("G1", "GTDB_predicted_prophages", "Viruses", 30000, None)],
-            phage_nodes.schema,
-        )
-    )
-    edges2 = shares_dna.unionByName(
-        spark.createDataFrame([("G1", "B3", 0.05)], shares_dna.schema)
-    )
-    infects2 = infects.unionByName(
-        spark.createDataFrame([("G1", "Escherichia")], infects.schema)
-    )
-    loose = clouds.clouds_by_host(nodes2, edges2, infects2, "Escherichia", 0.25, harsh=False)
-    assert {"G1", "B3"} <= node_ids(loose.nodes)
-    harsh = clouds.clouds_by_host(nodes2, edges2, infects2, "Escherichia", 0.25, harsh=True)
-    assert "G1" not in node_ids(harsh.nodes) and "B3" not in node_ids(harsh.nodes)
+def test_host_harsh_filters_seed_side_only(spark):
+    # G1 is a GTDB phage infecting Escherichia with one out-edge G1 -> B3.
+    # Harsh drops G1 as a SEED, so with no other way in, G1 and B3 vanish.
+    # (Fresh local frames: unions over the cached fixtures would recompute
+    # their Python RDDs in every one of the ~35 jobs a host cloud runs.)
+    nodes = spark.createDataFrame(
+        NODE_ROWS + [("G1", "GTDB_predicted_prophages", "Viruses", 30000, None)],
+        schemas.PHAGE_NODES,
+    ).cache()
+    infects = spark.createDataFrame(
+        INFECTS_ROWS + [("G1", "Escherichia")], schemas.INFECTS
+    ).cache()
+
+    def ids(extra_edges, harsh):
+        edges = spark.createDataFrame(EDGE_ROWS + extra_edges, schemas.SHARES_DNA)
+        res = clouds.clouds_by_host(nodes, edges, infects, "Escherichia", 0.25, harsh=harsh)
+        return node_ids(res.nodes)
+
+    g1_b3 = [("G1", "B3", 0.05)]
+    assert {"G1", "B3"} <= ids(g1_b3, harsh=False)
+    assert not {"G1", "B3"} & ids(g1_b3, harsh=True)
+
+    # The filter is on the seed side only: once the kept Escherichia seed
+    # B1 points at G1, G1 enters as a TARGET, while B3, reached only
+    # through G1's own out-edge, stays out.
+    b1_g1 = g1_b3 + [("B1", "G1", 0.05)]
+    got = ids(b1_g1, harsh=True)
+    assert "G1" in got and "B3" not in got
+    assert {"G1", "B3"} <= ids(b1_g1, harsh=False)
+    nodes.unpersist()
+    infects.unpersist()
 
 
 def test_host_any_host_join_deduped_deterministically(spark, phage_nodes, shares_dna, infects):

@@ -12,10 +12,27 @@ from phageclouds_graphdatabase_spark.compare import compare_results
 from phageclouds_graphdatabase_spark.plans.suite import SUITE, survey_coverage
 
 
+# Entries whose point IS the Python table function (row-at-a-time eval).
+PYTHON_UDTF_OK = {"udtf_explode_props", "udtf_table_arg_topk"}
+
+
 @pytest.mark.parametrize("name", sorted(SUITE))
 def test_suite_entry_matches_oracle(name, spark, duck, sf_dir):
+    """Besides the oracle comparison, each entry's physical plan is screened
+    for the two patterns that do not survive 100 TB: an unconstrained
+    CartesianProduct, and row-at-a-time Python eval (BatchEvalPython)
+    outside the two UDTF entries. Arrow-batched nodes (ArrowEvalPython /
+    MapInPandas) are the sanctioned Python path and are allowed. Streaming
+    entries execute eagerly (their result is already a local relation)
+    and are exercised by tests/test_streaming.py instead."""
     entry = SUITE[name]
     sdf = entry.fn(spark, sf_dir)
+    if not name.startswith("stream_") and name != "vis_html_golden_scan":
+        # read before collect(): the initial plan, before AQE re-plans it
+        plan = sdf._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+        if name not in PYTHON_UDTF_OK:
+            assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
     if entry.oracle is None:

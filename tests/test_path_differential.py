@@ -3,7 +3,10 @@ graphs, `var_length_paths` / `shortest_paths` / `cheapest_path_costs` must
 match a brute-force pure-Python enumerator implementing the definitions
 directly (relationship-uniqueness DFS, BFS levels, min-cost over simple
 paths). Catches join/anti-join bookkeeping bugs the hand-picked fixtures
-might miss."""
+might miss. The Cypher frontend's path forms (named var-length paths,
+chains, shortestPath/allShortestPaths, distinct-pair var-length) are held
+to the same references, and hi = 5 cases reach the checkpointed rounds
+above BFS_LAZY_K."""
 
 from __future__ import annotations
 
@@ -110,6 +113,53 @@ def ref_cheapest(edges, seeds, max_hops, scale, directed):
             if v != s:
                 out[(s, v)] = c
     return out
+
+
+def ref_walk_pairs(edges, seeds, lo, hi, directed):
+    """Distinct (seed, node) pairs joined by a WALK of lo..hi edges (edges
+    may repeat), self-pairs dropped -- the distinct-pair var-length
+    semantics of the Cypher frontend."""
+    adj: dict = {}
+    for s, d, _w in edges:
+        adj.setdefault(s, set()).add(d)
+        if not directed:
+            adj.setdefault(d, set()).add(s)
+    out = set()
+    for s in seeds:
+        level = {s}
+        for depth in range(1, hi + 1):
+            level = {v for u in level for v in adj.get(u, ())}
+            if depth >= lo:
+                out.update((s, v) for v in level if v != s)
+    return sorted(out)
+
+
+def ref_chain_paths(edges, seeds, segments):
+    """Brute-force paths through a chain of (lo, hi, directed) segments,
+    relationship-unique across the WHOLE chain."""
+    adj: dict = {True: {}, False: {}}
+    for i, (s, d, _w) in enumerate(edges):
+        adj[True].setdefault(s, []).append((d, i))
+        adj[False].setdefault(s, []).append((d, i))
+        adj[False].setdefault(d, []).append((s, i))
+    out = []
+
+    def walk(path, used, seg, hops):
+        lo, hi, directed = segments[seg]
+        if lo <= hops <= hi:
+            if seg + 1 == len(segments):
+                out.append(tuple(path))
+            else:
+                walk(path, used, seg + 1, 0)
+        if hops == hi:
+            return
+        for nxt, eid in adj[directed].get(path[-1], ()):
+            if eid not in used:
+                walk(path + [nxt], used | {eid}, seg, hops + 1)
+
+    for s in seeds:
+        walk([s], frozenset(), 0, 0)
+    return sorted(out)
 
 
 SEEDS = [1, 7, 23, 99]
@@ -249,3 +299,105 @@ def test_deterministic_walks_match_md5_reference(spark):
     # directed walk ends at the dead-end c (truncated, not extended)
     assert set(walks_by_start) == {"a", "b"}
     assert all(w[-1] == "c" for w in walks_by_start.values())
+
+
+def test_var_length_paths_deep_matches_bruteforce(spark):
+    """hi = 5 is above BFS_LAZY_K, so the checkpointed rounds run."""
+    names, edges = random_graph(7)
+    edf = spark.createDataFrame(edges, "src string, dst string, distance double")
+    seeds = spark.createDataFrame([(names[0],), (names[1],)], "id string")
+    got = sorted(
+        tuple(r.path)
+        for r in var_length_paths(seeds, edf, 2, 5, directed=False).collect()
+    )
+    assert got == ref_var_length_paths(edges, names[:2], 2, 5, False)
+
+
+def test_shortest_paths_deep_matches_bruteforce(spark):
+    names, edges = random_graph(23, n_nodes=10, n_edges=12)
+    edf = spark.createDataFrame(edges, "src string, dst string, distance double")
+    seeds = spark.createDataFrame([(names[0],), (names[2],)], "id string")
+    got = sorted(
+        tuple(r.path)
+        for r in shortest_paths(seeds, edf, 5, directed=False).collect()
+    )
+    assert got == ref_shortest(edges, [names[0], names[2]], 5, directed=False)
+
+
+# --- the same definitions through the Cypher frontend ------------------------
+
+
+def cypher_engine(spark, g_seed, **kw):
+    from phageclouds_graphdatabase_spark.cypher import CypherEngine, phage_catalog
+
+    names, edges = random_graph(g_seed, **kw)
+    nodes = spark.createDataFrame([(n,) for n in names], "accession string")
+    edf = spark.createDataFrame(edges, "src string, dst string, distance double")
+    return CypherEngine(phage_catalog(nodes, edf)), names, edges
+
+
+def seeded(pattern: str, ret: str) -> str:
+    return (
+        "MATCH (a:PhageGenome) WHERE a.accession IN $seeds "
+        f"MATCH {pattern} RETURN {ret}"
+    )
+
+
+def node_lists(df):
+    return sorted(tuple(r.ns) for r in df.collect())
+
+
+@pytest.mark.parametrize("g_seed", SEEDS[:2])
+@pytest.mark.parametrize("arrow", ["->", "-"])
+def test_cypher_named_var_length_matches_bruteforce(spark, g_seed, arrow):
+    eng, names, edges = cypher_engine(spark, g_seed)
+    q = seeded(f"p = (a)-[:sharesDNA*1..3]{arrow}(b:PhageGenome)", "nodes(p) AS ns")
+    got = node_lists(eng.run(q, {"seeds": names[:2]}))
+    assert got == ref_var_length_paths(edges, names[:2], 1, 3, arrow == "->")
+
+
+def test_cypher_named_var_length_deep_matches_bruteforce(spark):
+    eng, names, edges = cypher_engine(spark, 1)
+    q = seeded("p = (a)-[:sharesDNA*4..5]-(b)", "nodes(p) AS ns")
+    got = node_lists(eng.run(q, {"seeds": names[:2]}))
+    assert got == ref_var_length_paths(edges, names[:2], 4, 5, False)
+
+
+@pytest.mark.parametrize("g_seed", SEEDS[:2])
+@pytest.mark.parametrize("fn", ["allShortestPaths", "shortestPath"])
+def test_cypher_shortest_matches_bruteforce(spark, g_seed, fn):
+    eng, names, edges = cypher_engine(spark, g_seed)
+    seeds = [names[0], names[2]]
+    q = seeded(f"p = {fn}((a)-[:sharesDNA*..4]-(b:PhageGenome))", "nodes(p) AS ns")
+    got = node_lists(eng.run(q, {"seeds": seeds}))
+    want = ref_shortest(edges, seeds, 4, directed=False)
+    if fn == "shortestPath":
+        lexmin: dict = {}
+        for p in want:
+            key = (p[0], p[-1])
+            lexmin[key] = min(lexmin.get(key, p), p)
+        want = sorted(lexmin.values())
+    assert got == want
+
+
+@pytest.mark.parametrize("g_seed", SEEDS[:2])
+@pytest.mark.parametrize("arrow", ["->", "-"])
+def test_cypher_distinct_pairs_match_walks(spark, g_seed, arrow):
+    eng, names, edges = cypher_engine(spark, g_seed)
+    q = seeded(
+        f"(a)-[:sharesDNA*1..3]{arrow}(b:PhageGenome)",
+        "a.accession AS s, b.accession AS t",
+    )
+    got = sorted(tuple(r) for r in eng.run(q, {"seeds": names[:2]}).collect())
+    assert got == ref_walk_pairs(edges, names[:2], 1, 3, arrow == "->")
+
+
+def test_cypher_chain_paths_match_bruteforce(spark):
+    eng, names, edges = cypher_engine(spark, 7)
+    q = seeded(
+        "p = (a)-[:sharesDNA*1..2]-(m:PhageGenome)-[:sharesDNA]->(b)",
+        "nodes(p) AS ns",
+    )
+    got = node_lists(eng.run(q, {"seeds": names[:2]}))
+    want = ref_chain_paths(edges, names[:2], [(1, 2, False), (1, 1, True)])
+    assert got == want and want

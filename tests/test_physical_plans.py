@@ -89,31 +89,6 @@ def test_simhash_vocab_join_broadcasts(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_full_suite_plan_sweep(spark, sf_dir):
-    """Every suite query's physical plan is screened for the two patterns
-    that do not survive 100 TB: an unconstrained CartesianProduct and
-    row-at-a-time Python eval (BatchEvalPython) outside the two UDTF
-    queries whose point IS the Python table function. Arrow-batched nodes
-    (ArrowEvalPython / MapInPandas) are the sanctioned Python path and are
-    allowed. Streaming entries execute eagerly (their result is already a
-    local relation) and are exercised by tests/test_streaming.py instead."""
-    from phageclouds_graphdatabase_spark.plans.suite import SUITE
-
-    python_udtf_ok = {"udtf_explode_props", "udtf_table_arg_topk"}
-    skip = {n for n in SUITE if n.startswith("stream_")} | {"vis_html_golden_scan"}
-    cartesian, row_python = [], []
-    for name, entry in sorted(SUITE.items()):
-        if name in skip:
-            continue
-        plan = explain_str(entry.fn(spark, sf_dir))
-        if "CartesianProduct" in plan:
-            cartesian.append(name)
-        if "BatchEvalPython" in plan and name not in python_udtf_ok:
-            row_python.append(name)
-    assert not cartesian, f"cartesian products in: {cartesian}"
-    assert not row_python, f"row-at-a-time Python in: {row_python}"
-
-
 def test_cypher_compiled_plans_are_join_based(spark, sf_dir):
     """Cypher frontend plans: predicates reach the Parquet scans, no
     cartesian products, no row-Python eval, IN-lists stay Catalyst-native,

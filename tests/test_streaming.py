@@ -638,3 +638,20 @@ def test_tws_event_time_timer_session_flush(spark, tmp_path, rocksdb_provider):
     finally:
         q.stop()
     assert got == want
+
+
+def test_run_available_now_leaves_no_temp_view(spark):
+    """The memory sink registers its rows as a temporary view; a run must
+    drop it, or every call leaves a view holding its rows in the session."""
+
+    def temp_tables():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_tables()
+    src = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 5)
+        .load()
+    )
+    assert stream.run_available_now(src)
+    assert temp_tables() == before
