@@ -1189,10 +1189,11 @@ class CypherEngine:
                 rel, edge, params, rid=True, dist=need_dists
             )))
 
+        first_near = hops[0][3]
         cur_label = frame.vars[anchor][1]
-        anchor_key = self._anchor_expand_key(frame, anchor, hops[0][3])
-        if cur_label == _ANY:
-            cur_label = hops[0][3]
+        anchor_key = self._anchor_expand_key(frame, anchor, first_near)
+        if cur_label == _ANY:  # now restricted to first_near
+            cur_label = first_near
         init = [
             F.col("__pa"),
             F.array("__pa").alias("__nodes"),
