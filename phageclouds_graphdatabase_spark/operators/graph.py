@@ -22,6 +22,16 @@ def as_node_set(df: DataFrame, col: str) -> DataFrame:
     return df.select(F.col(col).alias("id")).distinct()
 
 
+def _endpoint_ids(e: DataFrame) -> DataFrame:
+    """The node set ``(id)`` of an edge frame: the distinct ids at either
+    end of its (src, dst) edges."""
+    return (
+        e.select(F.col("src").alias("id"))
+        .unionByName(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
 # Hint cap for node-set broadcasts. Query-sized seed sets (the reference's
 # use case: hundreds to thousands of accessions) stay far below it; a
 # cloud-membership node set from a large component (the 100M rehearsal
@@ -140,13 +150,12 @@ def degrees(edges: DataFrame) -> DataFrame:
 # grows ~2^k (the visited frame is consumed twice per round), so deep BFS
 # (exact closeness/harmonic, k=30) keeps the checkpointed loop.
 BFS_LAZY_K = 4
-# Iteration bound at or under which a fixed-iteration LINEAR loop
-# (pagerank/ppr/katz/eigenvector/HITS, label propagation) composes its
-# rounds into one lazy query: at the default 2 iterations each round's
-# shuffle is a few MB and the per-round job dominates.
+# Iteration bound at or under which a fixed-iteration LINEAR loop composes
+# its rounds into one lazy query: at the default 2 iterations each round's
+# shuffle is a few MB and the per-round job dominates. Read by _push_sum
+# (pagerank, personalized pagerank, katz, article rank, eigenvector, HITS),
+# fastrp_embeddings' propagation layers and GraphFrame.labelPropagation.
 ITER_LAZY = 4
-# The same bound for fastRP's propagation layers.
-FASTRP_LAZY_ITERS = 4
 # h-index iterations composed into each checkpointed query of a
 # fixed-rounds core decomposition (best of {1, 2, 4} at sf0.1).
 COREDEC_ROUND_BATCH = 4
@@ -669,11 +678,7 @@ def closeness_centrality_exact(
     larger graphs instead of silently dying at scale. Returns
     (id, score, n_reached, sum_d); unreached-by-anyone nodes are
     absent (their closeness is undefined), matching the sampled form."""
-    v = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    v = _endpoint_ids(edges)
     n = v.count()
     if n > max_nodes:
         raise ValueError(
@@ -735,11 +740,7 @@ def harmonic_centrality_exact(
             f"max_depth must be 1..64 (got {max_depth}): the per-depth "
             "column pivot is the exactness mechanism"
         )
-    v = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    v = _endpoint_ids(edges)
     n = v.count()
     if n > max_nodes:
         raise ValueError(
@@ -1093,6 +1094,85 @@ def betweenness_centrality_scaled(
     )
 
 
+def _push_sum(
+    e: DataFrame,
+    base: DataFrame,
+    x: DataFrame,
+    iterations: int,
+    *steps: tuple,
+    od: DataFrame | None = None,
+) -> list:
+    """The one loop of the linear centralities: ``iterations`` rounds of
+    integer push-sum over the edge frame ``e`` (src, dst), starting from
+    the (id, score) frame ``x``.
+
+    Each step ``(frm, to, contrib, update, col)`` is one message round.
+    Every edge carries the integer ``contrib`` (an expression over the
+    sender's score row, joined with ``od`` when given) from its ``frm``
+    end to its ``to`` end; the contributions are summed per target
+    (``groupBy`` + ``sum``, map-side combinable) into ``s``; the sums
+    left-join onto ``base`` (id, ...), so a node nothing reached sees a
+    null ``s``, and its new score ``col`` is the long ``update`` (an
+    expression over ``base``'s columns and ``s``). A round's cost is one
+    edges⋈scores join plus one groupBy shuffle, both keyed by node.
+    Sums and ``div`` on longs are exact and order-free, so every
+    operator built on this is bit-identical across engines and
+    partitionings.
+
+    Cut policy: at ``iterations <= ITER_LAZY`` the rounds compose into
+    one lazy query; above it every round is cut by :func:`_ckpt`.
+    Returns the last frame of each step (``x`` itself at 0 iterations)."""
+    lazy = iterations <= ITER_LAZY
+    outs = [x] * len(steps)
+    for _ in range(iterations):
+        for i, (frm, to, contrib, update, col) in enumerate(steps):
+            sender = x if od is None else x.join(od, "id")
+            s = (
+                e.join(sender, e[frm] == F.col("id"))
+                .select(F.col(to), contrib.alias("c"))
+                .groupBy(to)
+                .agg(F.sum("c").alias("s"))
+            )
+            x = base.join(s, base["id"] == s[to], "left_outer").select(
+                "id", update.cast("long").alias(col)
+            )
+            if not lazy:
+                x = _ckpt(x)
+            outs[i] = x
+    return outs
+
+
+def _out_degrees(e: DataFrame) -> DataFrame:
+    """(id, od): the out-degree of every node with an out-edge."""
+    return e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("od"))
+
+
+def _unit_l2(df: DataFrame, cols: list) -> DataFrame:
+    """(id, *cols) with each long column of ``cols`` put on its unit L2
+    sphere as doubles. The sum of squares is an exact decimal(38,0)
+    aggregate (order-free); the only float operations are one
+    correctly-rounded sqrt and one correctly-rounded division per value,
+    so the result is bit-identical across engines. An all-zero column
+    stays 0.0 rather than 0/0."""
+    ss = df.agg(*[
+        F.sum(F.col(c).cast("decimal(38,0)") * F.col(c).cast("decimal(38,0)"))
+        .alias(f"__ss_{c}")
+        for c in cols
+    ])
+    return df.crossJoin(F.broadcast(ss)).select(
+        "id",
+        *[
+            F.when(
+                F.col(f"__ss_{c}") > 0,
+                F.col(c).cast("double") / F.sqrt(F.col(f"__ss_{c}").cast("double")),
+            )
+            .otherwise(F.lit(0.0))
+            .alias(c)
+            for c in cols
+        ],
+    )
+
+
 def pagerank_scaled(
     edges: DataFrame,
     iterations: int = 2,
@@ -1100,46 +1180,33 @@ def pagerank_scaled(
     d_num: int = 85,
     d_den: int = 100,
 ) -> DataFrame:
-    """Fixed-iteration PageRank in INTEGER arithmetic: scores scaled to
-    ``scale`` units, damping d = d_num/d_den applied as integer
-    multiply-then-div. Every operation (sum, div) is exact and
-    order-independent, so the result is bit-identical across engines and
-    partitionings -- the property that makes an iterative analytics op
-    oracle-checkable at all (float PageRank differs per reduction order).
-    Returns (id, pr_scaled); nodes with no in-edges settle at the base
-    (1-d) mass. Distributed shape: per-iteration cost is one edges-scores
-    join + one groupBy(dst) sum, both shuffle-partitioned by key; scores
-    checkpoint per round to keep lineage flat."""
+    """Fixed-iteration PageRank in INTEGER arithmetic on the push-sum
+    kernel (:func:`_push_sum`): scores scaled to ``scale`` units, each
+    node sends ``pr div od`` along its out-edges, and damping
+    d = d_num/d_den applies as integer multiply-then-div,
+    ``pr' = (1-d)·scale + (d_num · s) div d_den``. Every operation (sum,
+    div) is exact and order-independent, so the result is bit-identical
+    across engines and partitionings -- the property that makes an
+    iterative analytics op oracle-checkable at all (float PageRank
+    differs per reduction order). Returns (id, pr_scaled); nodes with no
+    in-edges settle at the base (1-d) mass."""
     e = edges.select("src", "dst")
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    od = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("od"))
+    nodes = _endpoint_ids(e).localCheckpoint()
     base = (scale * (d_den - d_num)) // d_den
-    pr = nodes.withColumn("pr_scaled", F.lit(scale).cast("long"))
-    lazy = iterations <= ITER_LAZY
-    for _ in range(iterations):
-        contrib = (
-            e.join(pr.join(od, "id"), e["src"] == F.col("id"))
-            .select(F.col("dst"), F.expr("pr_scaled div od").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        pr = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left_outer")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"({d_num} * coalesce(s, 0L)) div {d_den}")
-                ).cast("long").alias("pr_scaled"),
-            )
-        )
-        if not lazy:
-            pr = _ckpt(pr)
+    (pr,) = _push_sum(
+        e,
+        nodes,
+        nodes.withColumn("pr_scaled", F.lit(scale).cast("long")),
+        iterations,
+        (
+            "src",
+            "dst",
+            F.expr("pr_scaled div od"),
+            F.lit(base) + F.expr(f"({d_num} * coalesce(s, 0L)) div {d_den}"),
+            "pr_scaled",
+        ),
+        od=_out_degrees(e),
+    )
     return pr
 
 
@@ -1151,22 +1218,17 @@ def personalized_pagerank_scaled(
     d_num: int = 85,
     d_den: int = 100,
 ) -> DataFrame:
-    """Personalized PageRank (the GDS PPR surface): identical integer
-    arithmetic to :func:`pagerank_scaled`, but the restart mass lands ONLY
-    on the seed set — init score = ``scale`` on seeds / 0 elsewhere, and
-    the per-iteration base term is (1-d)*scale for seeds, 0 for the rest.
-    Same distributed shape (edges-scores join + groupBy(dst) partial sum
-    per round); the seed set joins in as a broadcast flag, so
-    personalization adds no extra shuffle."""
+    """Personalized PageRank (the GDS PPR surface) on the push-sum
+    kernel: identical integer arithmetic to :func:`pagerank_scaled`, but
+    the restart mass lands ONLY on the seed set — init score = ``scale``
+    on seeds / 0 elsewhere, and the per-iteration base term is
+    (1-d)*scale for seeds, 0 for the rest. The seed flag rides on the
+    kernel's base frame, so personalization adds no extra shuffle per
+    round."""
     e = edges.select("src", "dst")
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
     seed_flag = (
-        nodes.join(
+        _endpoint_ids(e)
+        .join(
             seeds.select(F.col("id")).distinct().withColumn("__s", F.lit(1)),
             "id",
             "left_outer",
@@ -1174,31 +1236,24 @@ def personalized_pagerank_scaled(
         .select("id", F.coalesce(F.col("__s"), F.lit(0)).alias("is_seed"))
         .localCheckpoint()
     )
-    od = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("od"))
     base = (scale * (d_den - d_num)) // d_den
-    pr = seed_flag.select(
-        "id", (F.col("is_seed") * F.lit(scale)).cast("long").alias("pr_scaled")
+    (pr,) = _push_sum(
+        e,
+        seed_flag,
+        seed_flag.select(
+            "id", (F.col("is_seed") * F.lit(scale)).cast("long").alias("pr_scaled")
+        ),
+        iterations,
+        (
+            "src",
+            "dst",
+            F.expr("pr_scaled div od"),
+            F.col("is_seed") * F.lit(base)
+            + F.expr(f"({d_num} * coalesce(s, 0L)) div {d_den}"),
+            "pr_scaled",
+        ),
+        od=_out_degrees(e),
     )
-    lazy = iterations <= ITER_LAZY
-    for _ in range(iterations):
-        contrib = (
-            e.join(pr.join(od, "id"), e["src"] == F.col("id"))
-            .select(F.col("dst"), F.expr("pr_scaled div od").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        pr = (
-            seed_flag.join(contrib, seed_flag["id"] == contrib["dst"], "left_outer")
-            .select(
-                "id",
-                (
-                    F.col("is_seed") * F.lit(base)
-                    + F.expr(f"({d_num} * coalesce(s, 0L)) div {d_den}")
-                ).cast("long").alias("pr_scaled"),
-            )
-        )
-        if not lazy:
-            pr = _ckpt(pr)
     return pr
 
 
@@ -1209,47 +1264,32 @@ def katz_centrality_scaled(
     alpha_num: int = 1,
     alpha_den: int = 8,
 ) -> DataFrame:
-    """Fixed-iteration Katz centrality in INTEGER arithmetic (W6 — the
-    GDS alpha-centrality family, the directed complement of
-    pagerank_scaled): ``x_{t+1}(i) = scale + (alpha_num *
+    """Fixed-iteration Katz centrality in INTEGER arithmetic on the
+    push-sum kernel (W6 — the GDS alpha-centrality family, the directed
+    complement of pagerank_scaled): ``x_{t+1}(i) = scale + (alpha_num *
     sum_{j->i} x_t(j)) div alpha_den`` with ``x_0 = scale``. Unlike
     PageRank the in-neighbor contribution is NOT out-degree-normalized —
     Katz rewards raw in-neighbourhood mass (attenuated walks of every
     length). Integer multiply-then-div makes the fixed-iteration result
     exact and order-independent, hence bit-identical against an unrolled
-    SQL oracle — the property that makes an iterative analytics op
-    oracle-checkable at all. Distributed shape: per iteration one
-    edges⋈scores equi-join + one groupBy(dst) sum, both
-    shuffle-partitioned by key; scores checkpoint (_ckpt) per round.
-    Returns (id, katz_scaled); sources with no in-edges hold ``scale``."""
+    SQL oracle. Returns (id, katz_scaled); sources with no in-edges hold
+    ``scale``."""
     e = edges.select("src", "dst")
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
+    nodes = _endpoint_ids(e).localCheckpoint()
+    (x,) = _push_sum(
+        e,
+        nodes,
+        nodes.withColumn("katz_scaled", F.lit(scale).cast("long")),
+        iterations,
+        (
+            "src",
+            "dst",
+            F.col("katz_scaled"),
+            F.lit(scale)
+            + F.expr(f"({alpha_num} * coalesce(s, 0L)) div {alpha_den}"),
+            "katz_scaled",
+        ),
     )
-    x = nodes.withColumn("katz_scaled", F.lit(scale).cast("long"))
-    lazy = iterations <= ITER_LAZY
-    for _ in range(iterations):
-        contrib = (
-            e.join(x, e["src"] == F.col("id"))
-            .select(F.col("dst"), F.col("katz_scaled").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        x = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left_outer")
-            .select(
-                "id",
-                (
-                    F.lit(scale)
-                    + F.expr(f"({alpha_num} * coalesce(s, 0L)) div {alpha_den}")
-                ).cast("long").alias("katz_scaled"),
-            )
-        )
-        if not lazy:
-            x = _ckpt(x)
     return x
 
 
@@ -1668,13 +1708,13 @@ def article_rank_scaled(
     d_den: int = 100,
     avg_mode: str = "floor",
 ) -> DataFrame:
-    """Fixed-iteration ArticleRank in INTEGER arithmetic (round 6 — one
-    of the two procs that superseded gds.alpha.katz in stock GDS, the
-    other being eigenvector): the PageRank recurrence with each node's
-    out-contribution divided by ``od(u) + avg_od`` instead of ``od(u)``,
-    which damps the endorsements of low-out-degree nodes toward the
-    network average (the "citation from a short reference list counts
-    less disproportionately" fix).
+    """Fixed-iteration ArticleRank in INTEGER arithmetic on the push-sum
+    kernel (:func:`_push_sum`; round 6 — one of the two procs that
+    superseded gds.alpha.katz in stock GDS, the other being eigenvector):
+    the PageRank recurrence with each node's out-contribution divided by
+    ``od(u) + avg_od`` instead of ``od(u)``, which damps the endorsements
+    of low-out-degree nodes toward the network average (the "citation
+    from a short reference list counts less disproportionately" fix).
 
     ``avg_mode`` (round 7, VERDICT r6 ask #4 — narrowing the documented
     stock-GDS divergence):
@@ -1692,48 +1732,32 @@ def article_rank_scaled(
       max-score × |V| < 9.2e18 (e.g. scores ≤ 1e9 up to |V| = 9e9
       nodes), same class of documented bound as community_quality's m.
 
-    Same distributed shape as pagerank_scaled: per iteration one
-    edges⋈scores join + one groupBy(dst) sum. Returns (id, ar_scaled).
-    """
+    Returns (id, ar_scaled)."""
     if avg_mode not in ("floor", "exact"):
         raise ValueError("avg_mode must be 'floor' or 'exact'")
-    e = edges.select("src", "dst").localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = edges.select("src", "dst")
+    nodes = _endpoint_ids(e).localCheckpoint()
     n_edges = e.count()
     n_nodes = max(1, nodes.count())
     if avg_mode == "exact":
-        contrib_expr = f"(ar_scaled * {n_nodes}L) div (od * {n_nodes}L + {n_edges}L)"
+        contrib = f"(ar_scaled * {n_nodes}L) div (od * {n_nodes}L + {n_edges}L)"
     else:
-        contrib_expr = f"ar_scaled div (od + {n_edges // n_nodes}L)"
-    od = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("od"))
+        contrib = f"ar_scaled div (od + {n_edges // n_nodes}L)"
     base = (scale * (d_den - d_num)) // d_den
-    pr = nodes.withColumn("ar_scaled", F.lit(scale).cast("long"))
-    for _ in range(iterations):
-        contrib = (
-            e.join(pr.join(od, "id"), e["src"] == F.col("id"))
-            .select(
-                F.col("dst"),
-                F.expr(contrib_expr).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        pr = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left_outer")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"({d_num} * coalesce(s, 0L)) div {d_den}")
-                ).cast("long").alias("ar_scaled"),
-            )
-            .transform(_ckpt)
-        )
+    (pr,) = _push_sum(
+        e,
+        nodes,
+        nodes.withColumn("ar_scaled", F.lit(scale).cast("long")),
+        iterations,
+        (
+            "src",
+            "dst",
+            F.expr(contrib),
+            F.lit(base) + F.expr(f"({d_num} * coalesce(s, 0L)) div {d_den}"),
+            "ar_scaled",
+        ),
+        od=_out_degrees(e),
+    )
     return pr
 
 
@@ -1743,70 +1767,37 @@ def eigenvector_scaled(
     scale: int = 1_000_000,
     normalized: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration UNNORMALIZED eigenvector centrality in integers
-    (round 6 — the other gds.alpha.katz successor): ``x_0 = scale``,
-    ``x_{t+1}(v) = sum over in-neighbors u of x_t(u)`` — after k rounds
-    the score is scale × (number of length-k walks ending at v), the raw
-    power-iteration numerator. Stock GDS L2-normalizes each iteration
-    (floats whose value depends on reduction order); the engine keeps
-    the integer power step, the oracle-checkable form — the same
-    deviation Katz documents, and rank order per iteration matches the
-    normalized variant exactly (normalization is a positive per-round
-    global constant). Returns (id, eig_scaled); nodes no length-k walk
-    reaches settle at 0.
+    """Fixed-iteration UNNORMALIZED eigenvector centrality in integers on
+    the push-sum kernel (round 6 — the other gds.alpha.katz successor):
+    ``x_0 = scale``, ``x_{t+1}(v) = sum over in-neighbors u of x_t(u)`` —
+    after k rounds the score is scale × (number of length-k walks ending
+    at v), the raw power-iteration numerator. Stock GDS L2-normalizes
+    each iteration (floats whose value depends on reduction order); the
+    engine keeps the integer power step, the oracle-checkable form — the
+    same deviation Katz documents, and rank order per iteration matches
+    the normalized variant exactly (normalization is a positive
+    per-round global constant). Returns (id, eig_scaled); nodes no
+    length-k walk reaches settle at 0.
 
     ``normalized=True`` (round 7, VERDICT r6 ask #4 — stock-GDS VALUE
-    parity): returns (id, eigenvector double) on the unit L2 sphere.
-    Because per-round normalization only rescales by a positive global
-    scalar, normalizing ONCE at the end is mathematically identical to
-    GDS's per-round normalization (theirs exists for float-range
-    stability, not semantics) — and it keeps the result
-    oracle-checkable: the sum of squares is an EXACT decimal(38,0)
-    aggregate (order-free), and the only float ops are one
-    correctly-rounded sqrt and one correctly-rounded division per row,
-    bit-identical cross-engine. An all-zero round (no length-k walks
-    anywhere) yields 0.0 scores rather than 0/0."""
+    parity): returns (id, eigenvector double) on the unit L2 sphere
+    (:func:`_unit_l2`). Because per-round normalization only rescales by
+    a positive global scalar, normalizing ONCE at the end is
+    mathematically identical to GDS's per-round normalization (theirs
+    exists for float-range stability, not semantics) — and it keeps the
+    result oracle-checkable."""
     e = edges.select("src", "dst")
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
+    nodes = _endpoint_ids(e).localCheckpoint()
+    (x,) = _push_sum(
+        e,
+        nodes,
+        nodes.withColumn("eig_scaled", F.lit(scale).cast("long")),
+        iterations,
+        ("src", "dst", F.col("eig_scaled"), F.coalesce("s", F.lit(0)), "eig_scaled"),
     )
-    x = nodes.withColumn("eig_scaled", F.lit(scale).cast("long"))
-    lazy = iterations <= ITER_LAZY
-    for _ in range(iterations):
-        contrib = (
-            e.join(x, e["src"] == F.col("id"))
-            .select(F.col("dst"), F.col("eig_scaled").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        x = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left_outer")
-            .select(
-                "id",
-                F.coalesce(F.col("s"), F.lit(0)).cast("long").alias(
-                    "eig_scaled"
-                ),
-            )
-        )
-        if not lazy:
-            x = _ckpt(x)
     if not normalized:
         return x
-    xx = F.col("eig_scaled").cast("decimal(38,0)")
-    ss = x.agg(F.sum(xx * xx).alias("ss"))
-    return x.crossJoin(F.broadcast(ss)).select(
-        "id",
-        F.when(
-            F.col("ss") > 0,
-            F.col("eig_scaled").cast("double")
-            / F.sqrt(F.col("ss").cast("double")),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("eigenvector"),
-    )
+    return _unit_l2(x, ["eig_scaled"]).withColumnRenamed("eig_scaled", "eigenvector")
 
 
 def fastrp_embeddings(
@@ -1894,7 +1885,7 @@ def fastrp_embeddings(
     # next iteration + layer mixing — dedups at its aggregate exchange via
     # reuse). Deep runs keep the checkpointed loop: an O(iters)-deep plan
     # of array aggregates is fine at 4, not at 40.
-    lazy = iters <= FASTRP_LAZY_ITERS
+    lazy = iters <= ITER_LAZY
     layers = []
     for _ in range(iters):
         s = (
@@ -2495,11 +2486,7 @@ def _coredec_packed(
     from pyspark.sql.window import Window
 
     e = edges.select("src", "dst")
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    nodes = _endpoint_ids(e)
     b = nodes.withColumn(
         "bucket", F.pmod(F.xxhash64("id"), F.lit(1024))
     )
@@ -2748,13 +2735,14 @@ def hits_scores(
     iterations: int = 2,
     normalized: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration HITS hubs-and-authorities in exact integers (the
-    stock ``gds.alpha.hits`` surface; round 8). Directed src→dst edges;
-    ``h_0 = 1`` everywhere, then per iteration the textbook
-    (Kleinberg 1999) synchronous update pair:
+    """Fixed-iteration HITS hubs-and-authorities in exact integers on the
+    push-sum kernel (the stock ``gds.alpha.hits`` surface; round 8).
+    Directed src→dst edges; ``h_0 = 1`` everywhere, then per iteration
+    the textbook (Kleinberg 1999) synchronous update pair, one kernel
+    half-round each:
 
-        auth_t(v) = Σ over in-neighbors u of hub_{t-1}(u)
-        hub_t(u)  = Σ over out-neighbors v of auth_t(v)
+        auth_t(v) = Σ over in-neighbors u of hub_{t-1}(u)    (src→dst)
+        hub_t(u)  = Σ over out-neighbors v of auth_t(v)      (dst→src)
 
     Stock GDS (Pregel) L2-normalizes both vectors each iteration — a
     positive GLOBAL scalar per step, so directions are unaffected and
@@ -2762,77 +2750,27 @@ def hits_scores(
     eigenvector_scaled argument, applied twice: hub = E·(a/c) = (E·a)/c).
     ``normalized=False`` returns the raw integer walk counts
     (id, auth, hub longs) — the oracle-checkable form; ``normalized=True``
-    returns each vector on its unit L2 sphere as doubles (exact
-    decimal(38,0) sum of squares, one correctly-rounded sqrt + division
-    per row — bit-identical cross-engine).
+    returns each vector on its unit L2 sphere as doubles
+    (:func:`_unit_l2`).
 
     Bounds: values ≤ n·d_max^(2k), so iterations is capped at 8 and the
     caller owns n·d_max^(2k) < 2^63 (same documented contract as
-    eigenvector_scaled / katz). Scale: per-iteration cost is two
-    edges-sized shuffles with map-side combine; rounds checkpoint (_ckpt) so
-    lineage stays flat at any k."""
+    eigenvector_scaled / katz)."""
     if not 1 <= iterations <= 8:
         raise ValueError("need 1 <= iterations <= 8")
-    e = edges.select("src", "dst").localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
+    e = edges.select("src", "dst")
+    nodes = _endpoint_ids(e).localCheckpoint()
+    summed = F.coalesce("s", F.lit(0))
+    a, h = _push_sum(
+        e,
+        nodes,
+        nodes.withColumn("hub", F.lit(1).cast("long")),
+        iterations,
+        ("src", "dst", F.col("hub"), summed, "auth"),
+        ("dst", "src", F.col("auth"), summed, "hub"),
     )
-    h = nodes.withColumn("hub", F.lit(1).cast("long"))
-    a = None
-    lazy = iterations <= ITER_LAZY
-    for _ in range(iterations):
-        contrib_a = (
-            e.join(h, e["src"] == h["id"])
-            .select(F.col("dst"), F.col("hub").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        a = nodes.join(
-            contrib_a, nodes["id"] == contrib_a["dst"], "left_outer"
-        ).select(
-            "id", F.coalesce(F.col("s"), F.lit(0)).cast("long").alias("auth")
-        )
-        if not lazy:
-            a = _ckpt(a)
-        contrib_h = (
-            e.join(a, e["dst"] == a["id"])
-            .select(F.col("src"), F.col("auth").alias("c"))
-            .groupBy("src")
-            .agg(F.sum("c").alias("s"))
-        )
-        h = nodes.join(
-            contrib_h, nodes["id"] == contrib_h["src"], "left_outer"
-        ).select(
-            "id", F.coalesce(F.col("s"), F.lit(0)).cast("long").alias("hub")
-        )
-        if not lazy:
-            h = _ckpt(h)
     out = a.join(h, "id").select("id", "auth", "hub")
-    if not normalized:
-        return out
-    aa = F.col("auth").cast("decimal(38,0)")
-    hh = F.col("hub").cast("decimal(38,0)")
-    ss = out.agg(
-        F.sum(aa * aa).alias("ssa"), F.sum(hh * hh).alias("ssh")
-    )
-    return out.crossJoin(F.broadcast(ss)).select(
-        "id",
-        F.when(
-            F.col("ssa") > 0,
-            F.col("auth").cast("double") / F.sqrt(F.col("ssa").cast("double")),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("auth"),
-        F.when(
-            F.col("ssh") > 0,
-            F.col("hub").cast("double") / F.sqrt(F.col("ssh").cast("double")),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("hub"),
-    )
+    return _unit_l2(out, ["auth", "hub"]) if normalized else out
 
 
 class GraphContainsCycleError(ValueError):
@@ -2866,12 +2804,7 @@ def topological_levels(
     oracle SF). Returns (id, dist long); dist is a DOUBLE in stock's
     stream — the compiler casts there, keeping the exact long here."""
     e = dag.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    live_n = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+    live_n = _endpoint_ids(e).localCheckpoint()
     live_e = e.distinct().localCheckpoint()
     out: DataFrame | None = None
     rounds = 0
@@ -3225,11 +3158,7 @@ def node_similarity_topk(
     e = edges.select("src", "dst")
     if not assume_distinct:
         e = e.distinct()
-    ids = _string_rank_ids(
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    ).localCheckpoint()
+    ids = _string_rank_ids(_endpoint_ids(e)).localCheckpoint()
     ep = (
         e.join(ids.select(F.col("id").alias("src"), F.col("pos").alias("ps")), "src")
         .join(ids.select(F.col("id").alias("dst"), F.col("pos").alias("pd")), "dst")
@@ -4448,9 +4377,7 @@ def merge_components(
     )
     e = e.select("src", "dst").filter(F.col("src") != F.col("dst"))
     new_ids = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
+        _endpoint_ids(e)
         .join(membership, "id", "left_anti")
         .select("id", F.col("id").alias("component"))
     )

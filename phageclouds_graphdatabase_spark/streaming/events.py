@@ -762,6 +762,10 @@ def _stream_source_bytes(stream_df: DataFrame) -> int | None:
         return None
 
 
+# Input volume per state partition of a stateful streaming run (see
+# run_available_now).
+STREAM_STATE_TARGET_BYTES = 32 << 20
+
 # Serializes run_available_now's shuffle-partitions window: SQL confs are
 # session-global, so two windows open at once would restore each other's
 # temporary value.
@@ -779,27 +783,26 @@ def run_available_now(stream_df: DataFrame, output_mode: str = "append") -> list
     the partition count regardless of data volume — measured at sf0.01
     the stream-stream full join fell 8.4–12.8 s → 2.8–3.3 s going from 32
     to 4–8 state partitions, value-identical. The streaming query plans
-    with its own partition count, set for the lifetime of the query and
-    restored after — in production the state partition count is a
-    deliberate per-job knob anyway (it is frozen into the checkpoint on
-    first run and cannot be changed after), so sizing it to expected
-    state volume rather than inheriting the batch shuffle number is the
-    correct cluster behavior, not a local tune.
+    with its own partition count — in production the state partition
+    count is a deliberate per-job value anyway (it is frozen into the
+    checkpoint on first run and cannot be changed after), so sizing it
+    to expected state volume rather than inheriting the batch shuffle
+    number is the correct cluster behavior, not a local tune.
 
-    Round 10 (VERDICT r9 "What's wrong" #3): the count is now DERIVED
-    from the stream's file-source volume — one state partition per
-    $SPARK_GRAFT_STREAM_STATE_TARGET_BYTES (default 32 MB) of input,
-    clamped to [1, session shuffle partitions] — so a 100-TB stream under
-    default settings sizes its state stores to its volume instead of a
-    constant 8. $SPARK_GRAFT_STREAM_STATE_PARTITIONS still overrides
-    outright; non-file sources (no inspectable volume) keep the measured
-    default 8. The conf window runs under a module-local lock that also
-    covers reading the previous value and deriving the count, so two
-    concurrent windows can neither capture each other's temporary value
-    as the one to restore nor clamp against it. Batch queries planned on
-    other driver threads while the window is open still see the stream's
-    partition count (a performance effect only; values are unaffected)."""
-    import os
+    The count is DERIVED from the stream's file-source volume — one state
+    partition per ``STREAM_STATE_TARGET_BYTES`` of input, clamped to
+    [1, session shuffle partitions] — so a 100-TB stream sizes its state
+    stores to its volume instead of a constant; non-file sources (no
+    inspectable volume) keep the measured default 8. The count is set on
+    the session only across ``start()``: the query clones the session
+    when it starts and plans every micro-batch on the clone, so the conf
+    is restored before the run. The window runs under a module-local lock
+    that also covers reading the previous value and deriving the count,
+    so two concurrent windows can neither capture each other's temporary
+    value as the one to restore nor clamp against it. Batch queries
+    planned on other driver threads during that window still see the
+    stream's partition count (a performance effect only; values are
+    unaffected)."""
     import uuid
 
     spark = stream_df.sparkSession
@@ -808,19 +811,12 @@ def run_available_now(stream_df: DataFrame, output_mode: str = "append") -> list
     try:
         with _STREAM_CONF_LOCK:
             prev = spark.conf.get("spark.sql.shuffle.partitions")
-            parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-            if parts is None:
-                target = int(
-                    os.environ.get(
-                        "SPARK_GRAFT_STREAM_STATE_TARGET_BYTES", str(32 << 20)
-                    )
-                )
-                vol = _stream_source_bytes(stream_df)
-                if vol is None:
-                    parts = "8"
-                else:
-                    parts = str(max(1, min(int(prev), vol // target + 1)))
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            vol = _stream_source_bytes(stream_df)
+            if vol is None:
+                parts = 8
+            else:
+                parts = max(1, min(int(prev), vol // STREAM_STATE_TARGET_BYTES + 1))
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
             try:
                 q = (
                     stream_df.writeStream.format("memory")
@@ -829,9 +825,9 @@ def run_available_now(stream_df: DataFrame, output_mode: str = "append") -> list
                     .trigger(availableNow=True)
                     .start()
                 )
-                q.awaitTermination()
             finally:
                 spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.awaitTermination()
         return spark.table(name).collect()
     finally:
         # the memory sink registers its rows as a temp view: drop it, so

@@ -14,6 +14,7 @@
 """
 from __future__ import annotations
 
+import math
 import random
 
 import pytest
@@ -21,6 +22,8 @@ import pytest
 import phageclouds_graphdatabase_spark.operators.graph as G
 from phageclouds_graphdatabase_spark.graphframe import GraphFrame
 from phageclouds_graphdatabase_spark.operators.dedup import jaccard_pairs_capped
+
+from tests.test_path_differential import random_graph
 
 # ---------------------------------------------------------------------------
 # _ckpt: bounded statistics, reliable-cut guard
@@ -78,7 +81,7 @@ def test_reliable_ckpt_without_dir_fails_clearly(spark, monkeypatch):
 # lazy/eager gates of the bounded loops
 # ---------------------------------------------------------------------------
 
-_GATES = ("BFS_LAZY_K", "ITER_LAZY", "FASTRP_LAZY_ITERS", "COREDEC_ROUND_BATCH")
+_GATES = ("BFS_LAZY_K", "ITER_LAZY", "COREDEC_ROUND_BATCH")
 
 
 @pytest.fixture
@@ -162,6 +165,9 @@ def test_linear_centrality_loops_lazy_identical(spark, toggle, edges_df):
     _eager_vs_lazy(
         toggle, lambda: G.katz_centrality_scaled(edges_df, iterations=2)
     )
+    _eager_vs_lazy(
+        toggle, lambda: G.article_rank_scaled(edges_df, iterations=2)
+    )
     _eager_vs_lazy(toggle, lambda: G.eigenvector_scaled(edges_df, iterations=2))
     _eager_vs_lazy(toggle, lambda: G.hits_scores(edges_df, iterations=2))
     _eager_vs_lazy(toggle, lambda: G.fastrp_embeddings(edges_df, iters=2))
@@ -182,3 +188,149 @@ def test_coredec_round_batch_identical(spark, toggle, edges_df):
     toggle(3)
     batched = _rows(G.core_decomposition(edges_df, rounds=5))
     assert one == batched and one
+
+
+# ---------------------------------------------------------------------------
+# integer push-sum centralities against a pure-Python reference
+# ---------------------------------------------------------------------------
+#
+# Every operator below is exact integer arithmetic, so the reference is the
+# definition run round by round on Python ints. Iteration 3 runs the lazy
+# composed query, 6 (> ITER_LAZY) the per-round _ckpt loop.
+
+SCALE = 1_000_000
+
+
+def _push(edges, x, frm=0, to=1, weight=None):
+    """One round's per-target sums: Σ over edges frm->to of weight(frm),
+    x[frm] by default."""
+    weight = weight or x.__getitem__
+    s = dict.fromkeys(x, 0)
+    for e in edges:
+        s[e[to]] += weight(e[frm])
+    return s
+
+
+def _out_degree(edges, nodes):
+    od = dict.fromkeys(nodes, 0)
+    for u, _v, _w in edges:
+        od[u] += 1
+    return od
+
+
+def ref_pagerank(edges, nodes, iters, seeds=None, d_num=85, d_den=100):
+    od = _out_degree(edges, nodes)
+    base = SCALE * (d_den - d_num) // d_den
+    seed = {v: 1 if seeds is None or v in seeds else 0 for v in nodes}
+    x = {v: SCALE * seed[v] for v in nodes}
+    for _ in range(iters):
+        s = _push(edges, x, weight=lambda u: x[u] // od[u])
+        x = {v: seed[v] * base + d_num * s[v] // d_den for v in nodes}
+    return x
+
+
+def ref_katz(edges, nodes, iters, a_num=1, a_den=8):
+    x = dict.fromkeys(nodes, SCALE)
+    for _ in range(iters):
+        s = _push(edges, x)
+        x = {v: SCALE + a_num * s[v] // a_den for v in nodes}
+    return x
+
+
+def ref_article_rank(edges, nodes, iters, avg_mode, d_num=85, d_den=100):
+    od = _out_degree(edges, nodes)
+    n_e, n_v = len(edges), len(nodes)
+    if avg_mode == "exact":
+        share = lambda u: x[u] * n_v // (od[u] * n_v + n_e)  # noqa: E731
+    else:
+        share = lambda u: x[u] // (od[u] + n_e // n_v)  # noqa: E731
+    base = SCALE * (d_den - d_num) // d_den
+    x = dict.fromkeys(nodes, SCALE)
+    for _ in range(iters):
+        s = _push(edges, x, weight=share)
+        x = {v: base + d_num * s[v] // d_den for v in nodes}
+    return x
+
+
+def ref_eigenvector(edges, nodes, iters):
+    x = dict.fromkeys(nodes, SCALE)
+    for _ in range(iters):
+        x = _push(edges, x)
+    return x
+
+
+def ref_hits(edges, nodes, iters):
+    hub = dict.fromkeys(nodes, 1)
+    for _ in range(iters):
+        auth = _push(edges, hub)
+        hub = _push(edges, auth, frm=1, to=0)
+    return auth, hub
+
+
+def _unit(x):
+    ss = sum(v * v for v in x.values())
+    return {k: v / math.sqrt(ss) if ss else 0.0 for k, v in x.items()}
+
+
+@pytest.fixture(scope="module")
+def rand_graph(spark):
+    names, edges = random_graph(11, n_nodes=12, n_edges=20)
+    nodes = sorted({v for e in edges for v in e[:2]})
+    df = spark.createDataFrame(edges, "src string, dst string, distance double")
+    return df, edges, nodes
+
+
+@pytest.mark.parametrize("iters", [3, 6])
+def test_linear_centralities_match_reference(spark, rand_graph, iters):
+    df, edges, nodes = rand_graph
+    seeds = nodes[:2]
+    seed_df = spark.createDataFrame([(s,) for s in seeds], "id string")
+
+    def got(frame, *cols):
+        rows = frame.collect()
+        return [{r.id: r[c] for r in rows} for c in cols]
+
+    assert got(G.pagerank_scaled(df, iters), "pr_scaled") == [
+        ref_pagerank(edges, nodes, iters)
+    ]
+    assert got(
+        G.personalized_pagerank_scaled(df, seed_df, iters), "pr_scaled"
+    ) == [ref_pagerank(edges, nodes, iters, seeds=set(seeds))]
+    assert got(G.katz_centrality_scaled(df, iters), "katz_scaled") == [
+        ref_katz(edges, nodes, iters)
+    ]
+    for mode in ("floor", "exact"):
+        assert got(
+            G.article_rank_scaled(df, iters, avg_mode=mode), "ar_scaled"
+        ) == [ref_article_rank(edges, nodes, iters, mode)]
+    eig = ref_eigenvector(edges, nodes, iters)
+    assert got(G.eigenvector_scaled(df, iters), "eig_scaled") == [eig]
+    (unit,) = got(G.eigenvector_scaled(df, iters, normalized=True), "eigenvector")
+    assert unit == pytest.approx(_unit(eig), rel=1e-12)
+    auth, hub = ref_hits(edges, nodes, iters)
+    assert got(G.hits_scores(df, iters), "auth", "hub") == [auth, hub]
+    n_auth, n_hub = got(G.hits_scores(df, iters, normalized=True), "auth", "hub")
+    assert n_auth == pytest.approx(_unit(auth), rel=1e-12)
+    assert n_hub == pytest.approx(_unit(hub), rel=1e-12)
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["pagerank", "ppr", "katz", "article_rank", "eigenvector", "hits"],
+)
+def test_linear_centrality_leaves_one_persisted_rdd(spark, edges_df, op):
+    # at the default 2 iterations the rounds compose lazily: the one pin is
+    # the static base frame the rounds join back onto
+    seeds = spark.createDataFrame([("a",)], "id string")
+    build = {
+        "pagerank": lambda: G.pagerank_scaled(edges_df),
+        "ppr": lambda: G.personalized_pagerank_scaled(edges_df, seeds),
+        "katz": lambda: G.katz_centrality_scaled(edges_df),
+        "article_rank": lambda: G.article_rank_scaled(edges_df),
+        "eigenvector": lambda: G.eigenvector_scaled(edges_df),
+        "hits": lambda: G.hits_scores(edges_df),
+    }[op]
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    build().collect()
+    assert jsc.getPersistentRDDs().size() - before <= 1

@@ -112,26 +112,3 @@ def test_coredec_auto_fires_once_then_packs(spark, monkeypatch):
         ("a", 2), ("b", 2), ("c", 2)
     }
     assert len(calls) == 1
-
-
-def test_stream_source_bytes_and_derived_partitions(spark, tmp_path, monkeypatch):
-    from phageclouds_graphdatabase_spark.streaming import events as E
-
-    sf = "/root/testdata/sf0.001"
-    s = E.read_events_stream(spark, sf)
-    import os as _os
-    want = _os.path.getsize(f"{sf}/events.parquet")
-    got = E._stream_source_bytes(s.groupBy("user_id").count())
-    assert got == want
-    # derived default (no env override) is value-identical to the old
-    # constant-8 default on a stateful aggregation
-    agg = (
-        s.withWatermark("ts", "10 minutes").groupBy("user_id").count()
-    )
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    derived = sorted(map(tuple, E.run_available_now(agg, "update")))
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-    const8 = sorted(map(tuple, E.run_available_now(agg, "update")))
-    assert derived == const8
-    # conf restored after both runs
-    assert spark.conf.get("spark.sql.shuffle.partitions") is not None

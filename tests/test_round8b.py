@@ -1,6 +1,6 @@
-"""Round-8 second batch: triangle enumeration (gds.alpha.triangles), HITS
-(gds.alpha.hits), DAG topological sort (gds.dag.topologicalSort), and the
-coredec auto-probe degree-frame reuse.
+"""Round-8 second batch: triangle enumeration (gds.alpha.triangles), the
+HITS Cypher surface (gds.alpha.hits), DAG topological sort
+(gds.dag.topologicalSort), and the coredec auto-probe degree-frame reuse.
 
 Reference parity targets are the stock Neo4j GDS procs the reference's
 users would call against the same projected graph
@@ -60,45 +60,6 @@ def test_triangles_stream_consistent_with_counts(spark):
     counts = G.triangle_counts(_edges(spark, e))
     joined = counts.join(corners, "id", "full_outer").collect()
     assert all(r["n_triangles"] == r["count"] for r in joined)
-
-
-# ---------------------------------------------------------------------------
-# hits_scores
-# ---------------------------------------------------------------------------
-
-def test_hits_two_iterations_by_hand(spark):
-    # star: p1 -> {s1, s2}; p2 -> s1
-    e = _edges(spark, [("p1", "s1"), ("p1", "s2"), ("p2", "s1")])
-    got = {r.id: (r.auth, r.hub) for r in G.hits_scores(e, 1).collect()}
-    # iteration 1: auth = in-degree (hub0 = 1); hub = sum of new auths
-    assert got == {
-        "p1": (0, 3), "p2": (0, 2), "s1": (2, 0), "s2": (1, 0),
-    }
-    got2 = {r.id: (r.auth, r.hub) for r in G.hits_scores(e, 2).collect()}
-    # iteration 2: auth(s1) = hub(p1)+hub(p2) = 5, auth(s2) = hub(p1) = 3;
-    # hub(p1) = 5+3 = 8, hub(p2) = 5
-    assert got2 == {
-        "p1": (0, 8), "p2": (0, 5), "s1": (5, 0), "s2": (3, 0),
-    }
-
-
-def test_hits_normalized_unit_l2(spark):
-    e = _edges(spark, [("p1", "s1"), ("p1", "s2"), ("p2", "s1")])
-    rows = G.hits_scores(e, 2, normalized=True).collect()
-    ssa = sum(r.auth ** 2 for r in rows)
-    ssh = sum(r.hub ** 2 for r in rows)
-    assert ssa == pytest.approx(1.0) and ssh == pytest.approx(1.0)
-    # direction preserved: auth(s1)/auth(s2) == 5/3
-    byid = {r.id: r for r in rows}
-    assert byid["s1"].auth / byid["s2"].auth == pytest.approx(5 / 3)
-
-
-def test_hits_iterations_bound(spark):
-    e = _edges(spark, [("a", "b")])
-    with pytest.raises(ValueError):
-        G.hits_scores(e, 0)
-    with pytest.raises(ValueError):
-        G.hits_scores(e, 9)
 
 
 # ---------------------------------------------------------------------------

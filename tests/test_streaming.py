@@ -655,3 +655,51 @@ def test_run_available_now_leaves_no_temp_view(spark):
     )
     assert stream.run_available_now(src)
     assert temp_tables() == before
+
+
+def test_stream_state_partitions_reach_query(spark, monkeypatch):
+    """run_available_now plans the streaming query with the derived
+    state-partition count, and the session's own shuffle partitions are
+    back once the query has started."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    agg = stream.read_events_stream(spark, SF_DIR).groupBy("user_id").count()
+    vol = stream._stream_source_bytes(agg)
+    # a target in (vol/3, vol/2] derives 3 state partitions; the test
+    # session runs with 8
+    monkeypatch.setattr(stream, "STREAM_STATE_TARGET_BYTES", vol // 2)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    queries = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        queries.append(real_start(self, *args, **kwargs))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        return queries[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    assert stream.run_available_now(agg, output_mode="complete")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev != "3"
+    (q,) = queries
+    parts = {
+        op.numShufflePartitions
+        for p in q.recentProgress
+        for op in p.stateOperators
+    }
+    assert parts == {3}
+
+
+def test_stream_source_bytes_and_derived_partitions(spark, monkeypatch):
+    s = stream.read_events_stream(spark, SF_DIR)
+    want = os.path.getsize(f"{SF_DIR}/events.parquet")
+    assert stream._stream_source_bytes(s.groupBy("user_id").count()) == want
+    # the derived count (one state partition at the default target) and
+    # a tiny target (clamped to the session's count) give the same rows
+    # on a stateful aggregation
+    agg = s.withWatermark("ts", "10 minutes").groupBy("user_id").count()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    derived = sorted(map(tuple, stream.run_available_now(agg, "update")))
+    monkeypatch.setattr(stream, "STREAM_STATE_TARGET_BYTES", 1)
+    clamped = sorted(map(tuple, stream.run_available_now(agg, "update")))
+    assert derived == clamped
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
