@@ -11,6 +11,9 @@
   (composed) paths give identical rows on the same input. The module
   constants are the very gates the operators read, so patching them
   exercises both code paths.
+- The six linear centralities on the push-sum kernel match a pure-Python
+  integer reference on both sides of ``ITER_LAZY``, and at their default
+  2 iterations each leaves at most its one pinned base frame behind.
 """
 from __future__ import annotations
 

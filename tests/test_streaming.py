@@ -1,7 +1,9 @@
 """Structured Streaming tests (W3): each streaming plan runs over the events
 parquet with Trigger.AvailableNow and must agree with its batch twin from
 plans/suite_extensions.py (stream-batch parity is the correctness contract
-for every streaming operator)."""
+for every streaming operator). The run harness ``run_available_now`` is
+pinned too: it leaves no temp view, and its derived state-partition count
+reaches the query."""
 
 from __future__ import annotations
 
