@@ -671,6 +671,7 @@ def test_stream_state_partitions_reach_query(spark, monkeypatch):
     # session runs with 8
     monkeypatch.setattr(stream, "STREAM_STATE_TARGET_BYTES", vol // 2)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prev != "3"
     queries = []
     real_start = DataStreamWriter.start
 
@@ -681,7 +682,7 @@ def test_stream_state_partitions_reach_query(spark, monkeypatch):
 
     monkeypatch.setattr(DataStreamWriter, "start", start)
     assert stream.run_available_now(agg, output_mode="complete")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev != "3"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     (q,) = queries
     parts = {
         op.numShufflePartitions
