@@ -1737,8 +1737,14 @@ def article_rank_scaled(
         raise ValueError("avg_mode must be 'floor' or 'exact'")
     e = edges.select("src", "dst")
     nodes = _endpoint_ids(e).localCheckpoint()
-    n_edges = e.count()
-    n_nodes = max(1, nodes.count())
+    # |E| and |V| in one aggregate query over the tagged union of both
+    tally = e.select(F.lit(True).alias("is_edge")).unionByName(
+        nodes.select(F.lit(False).alias("is_edge"))
+    )
+    n_edges, n_nodes = tally.agg(
+        F.count_if("is_edge"), F.count_if(~F.col("is_edge"))
+    ).first()
+    n_nodes = max(1, n_nodes)
     if avg_mode == "exact":
         contrib = f"(ar_scaled * {n_nodes}L) div (od * {n_nodes}L + {n_edges}L)"
     else:

@@ -10,9 +10,11 @@ supplies only its seed frame and its attribute function.
 
 The node set stays a lazy frame: it is neither cached nor collected, so an
 op leaves no persisted state behind and makes no extra round trip to the
-driver. Catalyst recomputes it inside the induced-subgraph and members
-semi-joins (the reference instead re-ships it as a Python list literal
-inside each Cypher string, `phageclouds_gdb.py:65-71`).
+driver. Its three consumers (the induced-subgraph and members semi-joins)
+all run inside the sink's single query (`sinks.cloud_to_vis_dicts`), where
+AQE reuses its stages at runtime, so it is computed once per op (the
+reference instead re-ships it as a Python list literal inside each Cypher
+string, `phageclouds_gdb.py:65-71`).
 
 Golden-parity quirks reproduced on purpose:
 - expand is DIRECTED-only: edges are stored once per unordered pair and all
@@ -88,8 +90,9 @@ def _cloud(
     and `color_border` are added here, in that order."""
     qual = edges.filter(F.col("distance") <= F.lit(threshold))
     hit = qual.join(G.maybe_broadcast(seeds), qual["src"] == seeds["id"], "left_semi")
-    # One reference to `hit` per node-set use: the lazy node set is
-    # recomputed by each of its three consumers below.
+    # One reference to `hit` per node-set use: the lazy node set appears in
+    # each of its three consumers below, and the sink's one query computes
+    # it once.
     if kind == "family":
         ids = seeds.unionByName(hit.select(F.col("dst").alias("id")))
     else:

@@ -5,6 +5,9 @@ reference's pyvis output (/root/reference/phageclouds_gdb.py:102-120) from a
 self-contained template (no pyvis dependency in this runtime), with
 deterministic key order so goldens diff byte-stably. ``toPandas()`` happens
 only here -- the one sanctioned driver-side materialization (SURVEY.md §1.2).
+It is one Spark query per cloud: nodes and edges come back as one tagged
+union, so the cloud's lazy node set (`plans/clouds.py`) is computed once,
+inside that query, not once per side.
 """
 
 from __future__ import annotations
@@ -12,6 +15,8 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _TEMPLATE = """<html>
 <head>
@@ -39,32 +44,57 @@ _DEFAULT_OPTIONS = {
 }
 
 
+def _collect_both(nodes: DataFrame, edges: DataFrame):
+    """Both frames' rows in one Spark query: a union tagged `_k` (0 nodes,
+    1 edges) of one struct column per side, the other side's struct null.
+    Each side keeps the row order of its own `collect()`: the union's
+    partitions are its children's, in order. In one query AQE reuses the
+    cloud's node-set stages, which two queries would each recompute."""
+    n_type = StructType(nodes.schema.fields)
+    e_type = StructType(edges.schema.fields)
+    tagged = nodes.select(
+        F.lit(0).alias("_k"),
+        F.struct(*nodes.columns).alias("n"),
+        F.lit(None).cast(e_type).alias("e"),
+    ).unionByName(
+        edges.select(
+            F.lit(1).alias("_k"),
+            F.lit(None).cast(n_type).alias("n"),
+            F.struct(*edges.columns).alias("e"),
+        )
+    )
+    pdf = tagged.toPandas()
+    is_node = pdf["_k"] == 0
+    return pdf["n"][is_node], pdf["e"][~is_node]
+
+
 def cloud_to_vis_dicts(nodes: DataFrame, edges: DataFrame) -> tuple[list[dict], list[dict]]:
     """Render CloudResult frames to vis.DataSet dicts (pyvis-compatible
-    node/edge attribute structure)."""
-    npd = nodes.toPandas()
-    epd = edges.toPandas()
+    node/edge attribute structure), collecting both in one Spark query.
+    A row is a dict (Arrow) or a `Row` (no Arrow); both index by name."""
+    node_rows, edge_rows = _collect_both(nodes, edges)
+    has_title = "title" in nodes.columns
     vis_nodes = []
-    for row in npd.itertuples(index=False):
+    for row in node_rows:
         n = {
-            "color": {"background": row.color_background, "border": row.color_border},
-            "id": row.id,
-            "label": row.id,
+            "color": {"background": row["color_background"], "border": row["color_border"]},
+            "id": row["id"],
+            "label": row["id"],
             "shape": "dot",
-            "size": int(row.size),
+            "size": int(row["size"]),
         }
-        if getattr(row, "title", None) is not None:
-            n["title"] = row.title
+        if has_title and row["title"] is not None:
+            n["title"] = row["title"]
         vis_nodes.append(n)
     vis_edges = []
-    for row in epd.itertuples(index=False):
+    for row in edge_rows:
         vis_edges.append(
             {
-                "color": row.color,
-                "from": row.src,
-                "to": row.dst,
-                "value": float(row.value),
-                "weight": float(row.weight),
+                "color": row["color"],
+                "from": row["src"],
+                "to": row["dst"],
+                "value": float(row["value"]),
+                "weight": float(row["weight"]),
             }
         )
     return vis_nodes, vis_edges
@@ -146,8 +176,6 @@ def write_neo4j_admin_csv(
     when globbing parts. Fully distributed: a plain CSV write per side,
     no driver materialization, so a 100 TB graph exports as fast as the
     cluster writes CSV."""
-    from pyspark.sql import functions as F
-
     n = nodes.select(
         F.col(id_col).alias(f"{id_col}:ID"),
         *[c for c in nodes.columns if c != id_col],

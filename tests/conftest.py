@@ -25,9 +25,23 @@ TABLES = (
 )
 
 
+def driver_mem() -> str:
+    """The suite JVM's heap: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else half
+    of the host's memory in whole GiB. session.py's 16g product default
+    exceeds a small host, where the kernel then kills the JVM mid-suite."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2**30 // 2)}g"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("phageclouds-tests", shuffle_partitions=8)
+    s = get_spark(
+        "phageclouds-tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": driver_mem()},
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -167,16 +167,17 @@ def test_family_uncatalogued_fails_loud(spark, phage_nodes, shares_dna, lineages
 
 # --- Output contract and persisted state, per entry point -------------------
 
-# Threshold 0.2 is used by no other test, so each cloud plan here is new to
-# the session's cache manager and a leaked `.cache()` would add an RDD.
+# Threshold 0.2 is used by no other test, so each cloud plan of the
+# persisted-state test is new to the session's cache manager and a leaked
+# `.cache()` would add an RDD. The sink tests use the default 0.25.
 CLOUD_CALLS = {
-    "taxon": lambda n, e, inf, lin: clouds.clouds_by_taxon(n, e, "Tequatrovirus", 0.2),
-    "family": lambda n, e, inf, lin: clouds.clouds_by_family(
-        n, e, lin, "Herelleviridae", "genus", 0.2
+    "taxon": lambda n, e, inf, lin, t=0.2: clouds.clouds_by_taxon(n, e, "Tequatrovirus", t),
+    "family": lambda n, e, inf, lin, t=0.2: clouds.clouds_by_family(
+        n, e, lin, "Herelleviridae", "genus", t
     ),
-    "host": lambda n, e, inf, lin: clouds.clouds_by_host(n, e, inf, "Escherichia", 0.2),
-    "host_harsh": lambda n, e, inf, lin: clouds.clouds_by_host(
-        n, e, inf, "Escherichia", 0.2, harsh=True
+    "host": lambda n, e, inf, lin, t=0.2: clouds.clouds_by_host(n, e, inf, "Escherichia", t),
+    "host_harsh": lambda n, e, inf, lin, t=0.2: clouds.clouds_by_host(
+        n, e, inf, "Escherichia", t, harsh=True
     ),
 }
 
@@ -212,6 +213,53 @@ def test_cloud_op_leaves_no_persisted_state(spark, phage_nodes, shares_dna, infe
     res = CLOUD_CALLS[kind](*inputs)
     sinks.write_vis_html(res.nodes, res.edges, str(tmp_path / "cloud.html"))
     assert jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("kind", sorted(CLOUD_CALLS))
+def test_vis_dicts_keep_each_frames_row_order(spark, phage_nodes, shares_dna, infects,
+                                             lineages, kind):
+    # The HTML lists rows in collect order, so the one-query sink must hand
+    # back each side in the order of that frame's own collect().
+    res = CLOUD_CALLS[kind](phage_nodes, shares_dna, infects, lineages, 0.25)
+    want_nodes = [(r.id, r.size, r.color_background, r.title) for r in res.nodes.collect()]
+    want_edges = [(r.src, r.dst, r.weight, r.value) for r in res.edges.collect()]
+    vis_nodes, vis_edges = sinks.cloud_to_vis_dicts(res.nodes, res.edges)
+    got_nodes = [(n["id"], n["size"], n["color"]["background"], n.get("title"))
+                 for n in vis_nodes]
+    got_edges = [(e["from"], e["to"], e["weight"], e["value"]) for e in vis_edges]
+    assert want_nodes and want_edges
+    assert got_nodes == want_nodes
+    assert got_edges == want_edges
+
+
+@pytest.mark.parametrize("kind", sorted(CLOUD_CALLS))
+def test_vis_sink_makes_one_driver_round_trip(spark, phage_nodes, shares_dna, infects,
+                                             lineages, tmp_path, monkeypatch, kind):
+    # Nodes and edges come to the driver in one Spark query, so the cloud's
+    # node set is computed once per op, not once per side.
+    res = CLOUD_CALLS[kind](phage_nodes, shares_dna, infects, lineages, 0.25)
+    cls = type(res.nodes)  # the implementation class, not the abstract one
+    calls = []
+    depth = [0]
+
+    def counting(name):
+        real = getattr(cls, name)
+
+        def wrapper(self, *a, **kw):
+            if depth[0] == 0:  # toPandas may collect internally
+                calls.append(name)
+            depth[0] += 1
+            try:
+                return real(self, *a, **kw)
+            finally:
+                depth[0] -= 1
+
+        return wrapper
+
+    for name in ("toPandas", "collect", "toLocalIterator"):
+        monkeypatch.setattr(cls, name, counting(name))
+    sinks.write_vis_html(res.nodes, res.edges, str(tmp_path / "cloud.html"))
+    assert len(calls) == 1, calls
 
 
 # --- Golden parity (SURVEY.md §5: the reference's only correctness artifacts)

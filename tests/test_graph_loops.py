@@ -14,6 +14,8 @@
 - The six linear centralities on the push-sum kernel match a pure-Python
   integer reference on both sides of ``ITER_LAZY``, and at their default
   2 iterations each leaves at most its one pinned base frame behind.
+- Packed core decomposition probes for packing once: its inner loop never
+  re-probes the packed graph.
 """
 from __future__ import annotations
 
@@ -337,3 +339,58 @@ def test_linear_centrality_leaves_one_persisted_rdd(spark, edges_df, op):
     before = jsc.getPersistentRDDs().size()
     build().collect()
     assert jsc.getPersistentRDDs().size() - before <= 1
+
+
+# --- packed core decomposition ------------------------------------------------
+#
+# `_coredec_packed` must pass pack_ids=False to the inner loop: the "auto"
+# default re-probes the packed graph, and packing preserves the degree
+# histogram, so every graph deep enough to trigger packing would recurse
+# (and re-encode) forever.
+
+
+def test_coredec_packed_does_not_reprobe(spark, monkeypatch):
+    # Force the auto probe to always fire: before the round-10 fix the
+    # packed path delegated with pack_ids defaulting to "auto", so this
+    # recursed (the packed graph has the identical degree histogram).
+    calls = []
+    real = G._coredec_auto_pack
+
+    def probe(*a, **kw):
+        calls.append(1)
+        return True
+
+    monkeypatch.setattr(G, "_coredec_auto_pack", probe)
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")],
+        "src string, dst string",
+    )
+    out = G.core_decomposition(e, rounds=2, pack_ids=True)
+    got = {(r["id"], r["core"]) for r in out.collect()}
+    # pack_ids=True must never consult the probe at all
+    assert calls == []
+    monkeypatch.setattr(G, "_coredec_auto_pack", real)
+    want = {
+        (r["id"], r["core"])
+        for r in G.core_decomposition(e, rounds=2, pack_ids=False).collect()
+    }
+    assert got == want
+
+
+def test_coredec_auto_fires_once_then_packs(spark, monkeypatch):
+    # auto → probe True → packed path → inner loop must not re-probe
+    calls = []
+
+    def probe(*a, **kw):
+        calls.append(1)
+        return True
+
+    monkeypatch.setattr(G, "_coredec_auto_pack", probe)
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
+    )
+    out = G.core_decomposition(e, rounds=2, pack_ids="auto")
+    assert {(r["id"], r["core"]) for r in out.collect()} == {
+        ("a", 2), ("b", 2), ("c", 2)
+    }
+    assert len(calls) == 1

@@ -2,7 +2,9 @@
 FIXTURES.md §A synthetic graph, including the golden-parity quirks:
 directed-only expand, exact-threshold edges, -0.0 distances, isolated nodes.
 
-A pure-Python union-find is the oracle for connected components."""
+A pure-Python union-find is the oracle for connected components. The
+node-similarity decode joins broadcast their id dictionary only under the
+row cap, counted over every distinct node."""
 
 from __future__ import annotations
 
@@ -1575,3 +1577,58 @@ def test_core_decomposition_pack_ids_matches(spark):
         )
     )
     assert d == sorted(map(tuple, G.core_decomposition(e).collect()))
+
+
+# --- node-similarity decode-dictionary broadcast gate -------------------------
+#
+# The gate must read |ids| (all distinct nodes), not nv (out-degree
+# holders): a sink-heavy graph with few sources but many nodes must NOT
+# broadcast the dictionary past the cap.
+
+
+def full_explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _sink_heavy_edges(spark):
+    # 2 sources, 6 distinct nodes total: nv=2 (out-degree holders) but
+    # |ids|=6 — the ADVICE r9 shape where nv under-counts the dictionary
+    rows = [
+        ("s1", "b1"), ("s1", "b2"), ("s1", "b3"),
+        ("s2", "b1"), ("s2", "b2"),
+    ]
+    return spark.createDataFrame(rows, "src string, dst string")
+
+
+def test_nodesim_decode_gate_counts_all_ids(spark, monkeypatch):
+    e = _sink_heavy_edges(spark)
+    # cap between nv (=2) and |ids| (=6): the decode joins must NOT
+    # broadcast the dictionary (before the fix nv<=cap broadcast it)
+    monkeypatch.setattr(G, "NODESIM_DEG_BROADCAST_MAX_ROWS", 3)
+    low = G.node_similarity_topk(e, k=2)
+    # cap above |ids|: broadcast is correct and expected
+    monkeypatch.setattr(G, "NODESIM_DEG_BROADCAST_MAX_ROWS", 100)
+    high = G.node_similarity_topk(e, k=2)
+    n_bx_low = full_explain(low).count("BroadcastExchange")
+    n_bx_high = full_explain(high).count("BroadcastExchange")
+    # the two decode joins flip from shuffle to broadcast across the cap
+    assert n_bx_high >= n_bx_low + 2
+    # and the gate is purely physical: values identical on both sides
+    key = lambda r: (r["a"], r["rnk"])  # noqa: E731
+    assert sorted(map(tuple, low.collect()), key=lambda t: (t[0], t[5])) == \
+        sorted(map(tuple, high.collect()), key=lambda t: (t[0], t[5]))
+
+
+def test_nodesim_jvm_path_decode_gate(spark, monkeypatch):
+    # vectorized=False takes the ids.count() fallback for the same gate
+    e = _sink_heavy_edges(spark)
+    monkeypatch.setattr(G, "NODESIM_DEG_BROADCAST_MAX_ROWS", 3)
+    low = G.node_similarity_topk(e, k=2, vectorized=False)
+    monkeypatch.setattr(G, "NODESIM_DEG_BROADCAST_MAX_ROWS", 100)
+    high = G.node_similarity_topk(e, k=2, vectorized=False)
+    assert full_explain(high).count("BroadcastExchange") >= \
+        full_explain(low).count("BroadcastExchange") + 2
+    assert sorted(map(tuple, low.collect())) == \
+        sorted(map(tuple, high.collect()))
